@@ -20,8 +20,8 @@ import graft.ops.Ann
   *      local join;
   *   2. local join: two entries sharing a list owner become a candidate pair
   *      (one self-equi-join on the owner, bare-id shuffle, distinct);
-  *   3. exact cosine on candidates (joined to vectors twice — co-partitioned
-  *      hash joins), 5-dp rounded for cross-run determinism;
+  *   3. exact cosine on candidates (joined to vectors twice — broadcast or
+  *      co-partitioned joins), 5-dp rounded for cross-run determinism;
   *   4. union with the incumbent lists → per-node top-k window (partitioned
   *      by node: no global sort anywhere).
   *
@@ -364,7 +364,7 @@ object Knn {
     index.count()
 
     // vectors are broadcast while the corpus fits an executor (the cheap
-    // side of a few-hundred-MB bound); past that, co-partitioned hash joins
+    // side of a few-hundred-MB bound); past that, co-partitioned shuffle joins
     val vside = if (n <= 500000L) broadcast(vecs) else vecs
     def withSim(pairs: DataFrame): DataFrame =
       pairs

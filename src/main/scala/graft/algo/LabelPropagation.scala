@@ -164,38 +164,50 @@ object LabelPropagation {
 
     val loopCfg = LoopConfig(cfg.maxIterations, cfg.checkpointDir, cfg.checkpointInterval,
       shuffleWidth = Some(parts))
-    val result = SuperstepLoop.run(init, loopCfg) { (state, iter) =>
-      // Semi-synchronous schedule — the deterministic, distributed analogue
-      // of the reference's asynchronous in-place updates
-      // (LabelPropagation.java:139-148): every iteration computes the
-      // synchronous vote for ALL nodes (that powers the convergence check:
-      // converged ⇔ a full synchronous pass would change nothing, a genuine
-      // fixpoint), but only a per-iteration pseudo-random half of the nodes
-      // adopts its new label. Alternating halves break the 2-cycle
-      // oscillations a fully synchronous schedule exhibits on bipartite-ish
-      // structures; the hash makes the schedule a pure function of
-      // (id, iteration) — bit-identical across runs and parallelism levels.
-      //
-      // Gather the labels of out-neighbors: vote (src ← label(dst), weight).
-      val votes = edges
-        .join(state.select(col("id").as("dst"), col("label").as("cand")), "dst")
-        .groupBy("src", "cand").agg(sum("weight").as("w"))
-      // argmax by (weight desc, label asc): max(struct(w, -cand)) — built-in
-      // aggregate, no UDAF (SURVEY.md §4 item 3).
-      val best = votes
-        .groupBy(col("src").as("id"))
-        .agg(max(struct(col("w"), (-col("cand")).as("neg"))).as("b"))
-        .select(col("id"), (-col("b.neg")).as("voted"))
-      val phase =
-        if (cfg.schedule == Schedule.FullSync) lit(true)
-        else pmod(xxhash64(col("id"), lit(iter.toLong)), lit(2L)) === lit(0L)
-      val wants = col("voted").isNotNull && col("voted") =!= col("label")
-      state.select("id", "label").join(best, Seq("id"), "left")
-        .select(col("id"),
-          when(phase && wants, col("voted")).otherwise(col("label")).as("label"),
-          wants.as(SuperstepLoop.ActiveCol))
-    }
+    val result = SuperstepLoop.run(init, loopCfg)(syncStep(edges, cfg.schedule, parts))
     edges.unpersist(false)
     LpResult(result.state.select("id", "label"), result.ranIterations, result.didConverge)
+  }
+
+  /** One Sync/FullSync iteration over `state` (id, label, _active),
+    * hash-partitioned by id into `parts` like the dst-partitioned `edges`.
+    *
+    * Semi-synchronous schedule — the deterministic, distributed analogue
+    * of the reference's asynchronous in-place updates
+    * (LabelPropagation.java:139-148): every iteration computes the
+    * synchronous vote for ALL nodes (that powers the convergence check:
+    * converged ⇔ a full synchronous pass would change nothing, a genuine
+    * fixpoint), but only a per-iteration pseudo-random half of the nodes
+    * adopts its new label. Alternating halves break the 2-cycle
+    * oscillations a fully synchronous schedule exhibits on bipartite-ish
+    * structures; the hash makes the schedule a pure function of
+    * (id, iteration) — bit-identical across runs and parallelism levels.
+    *
+    * One exchange per iteration: the votes are hash-partitioned by `src`
+    * once, and the (src, cand) sum, the per-src argmax and the join back
+    * onto the state all reuse that partitioning. Both joins build their
+    * hash table on the V-row side, so the edge table is never sorted. */
+  private[graft] def syncStep(edges: DataFrame, schedule: Schedule, parts: Int)
+                             (state: DataFrame, iter: Int): DataFrame = {
+    // Gather the labels of out-neighbors: vote (src ← label(dst), weight).
+    val votes = edges
+      .join(state.select(col("id").as("dst"), col("label").as("cand")).hint("shuffle_hash"), "dst")
+      .repartition(parts, col("src"))
+      .groupBy("src", "cand").agg(sum("weight").as("w"))
+    // argmax by (weight desc, label asc): max(struct(w, -cand)) — built-in
+    // aggregate, no UDAF (SURVEY.md §4 item 3). A struct buffer has no hash
+    // aggregate, so this plans a SortAggregate that sorts the vote rows.
+    val best = votes
+      .groupBy(col("src").as("id"))
+      .agg(max(struct(col("w"), (-col("cand")).as("neg"))).as("b"))
+      .select(col("id"), (-col("b.neg")).as("voted"))
+    val phase =
+      if (schedule == Schedule.FullSync) lit(true)
+      else pmod(xxhash64(col("id"), lit(iter.toLong)), lit(2L)) === lit(0L)
+    val wants = col("voted").isNotNull && col("voted") =!= col("label")
+    state.select("id", "label").join(best.hint("shuffle_hash"), Seq("id"), "left")
+      .select(col("id"),
+        when(phase && wants, col("voted")).otherwise(col("label")).as("label"),
+        wants.as(SuperstepLoop.ActiveCol))
   }
 }

@@ -28,7 +28,7 @@ object MsBfs {
   def distSigma(edges: DataFrame, sources: DataFrame, maxDepth: Int = 100): DataFrame = {
     val spark = edges.sparkSession
     // loop-scoped conf (AQE off, no auto-broadcast of the growing visited
-    // set, hash joins): same discipline as SuperstepLoop — per-level
+    // set): same discipline as SuperstepLoop — per-level
     // re-planning and driver-side state broadcasts are the fixed costs that
     // dominate BFS levels at small per-level compute.
     graft.pregel.SuperstepLoop.withIterationConf(spark) {

@@ -175,14 +175,18 @@ object PageRank {
     }
   }
 
-  private def step(augEdges: DataFrame, hubPath: Option[(DataFrame, DataFrame)],
-                   cfg: PageRankConfig, deltaCoefficient: Double)
-                  (state: DataFrame, iter: Int): DataFrame = {
+  /** One superstep over `state` (id, rank, delta, _active), hash-partitioned
+    * by id like the src-partitioned `augEdges`. */
+  private[graft] def step(augEdges: DataFrame, hubPath: Option[(DataFrame, DataFrame)],
+                          cfg: PageRankConfig, deltaCoefficient: Double)
+                         (state: DataFrame, iter: Int): DataFrame = {
     val lambda = cfg.dampingFactor * deltaCoefficient
     // Single pass over the augmented edge table: carrier rows (norm null)
     // transport the node's own rank; message rows send delta*norm while the
-    // source is active. Inactive sources still flow their carrier.
-    val mainFlow = state.join(augEdges, col("id") === col("src"))
+    // source is active. Inactive sources still flow their carrier. The
+    // V-row state is the hash-join build side, so the E-row edge table only
+    // streams past it and is never sorted.
+    val mainFlow = state.hint("shuffle_hash").join(augEdges, col("id") === col("src"))
       .select(col("dst"),
         when(col("norm").isNull, col("rank")).as("carrier"),
         when(col("norm").isNotNull && col(SuperstepLoop.ActiveCol),

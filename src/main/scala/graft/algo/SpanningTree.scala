@@ -57,9 +57,12 @@ object SpanningTree {
     // eff = the weight actually minimized (negated for max spanning tree)
     val eff = if (minimize) col("weight") else -col("weight")
 
-    var comp = graph.vertices.select(col("id"), col("id").as("comp"))
+    // `compHandle` holds the storage; `comp` is the plan-truncated view of it
+    // (unpersisting the view would release nothing)
+    var compHandle = graph.vertices.select(col("id"), col("id").as("comp"))
       .repartition(parts, col("id")).persist()
-    comp.count()
+    compHandle.count()
+    var comp = compHandle
 
     var tree = List.empty[DataFrame]
     var rounds = 0
@@ -118,7 +121,8 @@ object SpanningTree {
           .select(col("id"), coalesce(col("root"), col("comp")).as("comp"))
           .repartition(parts, col("id")).persist()
         newComp.count()
-        comp.unpersist(false); cross.unpersist(false)
+        compHandle.unpersist(false); cross.unpersist(false)
+        compHandle = newComp
         comp = newComp
         done = true
       } else {
@@ -143,13 +147,14 @@ object SpanningTree {
         // 2. merge: selection pseudo-forest parent(c) = other(c); 2-cycles
         // (mutual picks) are rooted at the smaller id, then pointer-doubled.
         val rawPar = chosen.select(col("c"), col("other").as("par"))
-        var par = rawPar.alias("p")
+        var parHandle = rawPar.alias("p")
           .join(rawPar.alias("q"), col("p.par") === col("q.c"), "left")
           .select(col("p.c").as("c"),
             when(col("q.par") === col("p.c") && col("p.c") < col("p.par"),
                  col("p.c")).otherwise(col("p.par")).as("par"))
           .repartition(parts, col("c")).persist()
-        par.count()
+        parHandle.count()
+        var par = parHandle
         var jumping = true
         var jumps = 0
         while (jumping && jumps < 64) {
@@ -168,7 +173,8 @@ object SpanningTree {
           val moved = nxt.alias("n")
             .join(par.alias("o"), col("n.c") === col("o.c"))
             .filter(col("n.par") =!= col("o.par")).count()
-          par.unpersist(false)
+          parHandle.unpersist(false)
+          parHandle = nxt0
           par = nxt
           jumping = moved > 0
         }
@@ -177,10 +183,11 @@ object SpanningTree {
           .select(col("id"), coalesce(col("par"), col("comp")).as("comp"))
           .repartition(parts, col("id")).persist()
         newComp.count()
-        comp.unpersist(false); chosen.unpersist(false)
-        par.unpersist(false); cross.unpersist(false)
+        compHandle.unpersist(false); chosen.unpersist(false)
+        parHandle.unpersist(false); cross.unpersist(false)
         // plan-truncate: comp is referenced twice per Borůvka round (join on
         // a and on b) — without the cut the logical plan doubles per round
+        compHandle = newComp
         comp = org.apache.spark.sql.GraftSqlCompat.truncatePlan(newComp)
       }
     }
@@ -201,7 +208,7 @@ object SpanningTree {
     val out = restricted.select(col("a").as("src"), col("b").as("dst"),
       col("weight")).persist()
     out.count()
-    canon.unpersist(false); comp.unpersist(false)
+    canon.unpersist(false); compHandle.unpersist(false)
     tree.foreach(_.unpersist(false))
     Result(out, rounds)
     }

@@ -79,23 +79,31 @@ object Wcc {
 
     val loopCfg = LoopConfig(cfg.maxSteps, cfg.checkpointDir, cfg.checkpointInterval,
       fusedSteps = cfg.fusedSteps, shuffleWidth = Some(parts))
-    val result = SuperstepLoop.run(init, loopCfg) { (state, _) =>
-      val candidates = state
-        .filter(col(SuperstepLoop.ActiveCol))
-        .select(col("id").as("src"), col("comp"))
-        .join(undirected, "src")
-        .select(col("dst").as("id"), col("comp").as("cand"))
-        .groupBy("id").agg(min("cand").as("cand"))
-      state.select("id", "comp").join(candidates, Seq("id"), "left")
-        .select(col("id"), least(col("comp"), col("cand")).as("comp"),
-                (col("cand") < col("comp")).as("_changed"))
-        .withColumn(SuperstepLoop.ActiveCol, coalesce(col("_changed"), lit(false)))
-        .drop("_changed")
-    }
+    val result = SuperstepLoop.run(init, loopCfg)((state, _) => step(undirected)(state))
     undirected.unpersist(false)
 
     val comps = result.state.select(col("id"), col("comp").as("componentId"))
     finish(comps, cfg, result.ranIterations, result.didConverge)
+  }
+
+  /** One hash-min superstep over `state` (id, comp, _active), hash-partitioned
+    * by id like the src-partitioned `undirected` edges. Both joins build
+    * their hash table on the V-row side (the active frontier, then the
+    * per-vertex minimum), so the edge table is never sorted and the
+    * superstep's only exchange is the min-aggregation's. */
+  private[graft] def step(undirected: DataFrame)(state: DataFrame): DataFrame = {
+    val candidates = state
+      .filter(col(SuperstepLoop.ActiveCol))
+      .select(col("id").as("src"), col("comp"))
+      .hint("shuffle_hash")
+      .join(undirected, "src")
+      .select(col("dst").as("id"), col("comp").as("cand"))
+      .groupBy("id").agg(min("cand").as("cand"))
+    state.select("id", "comp").join(candidates.hint("shuffle_hash"), Seq("id"), "left")
+      .select(col("id"), least(col("comp"), col("cand")).as("comp"),
+              (col("cand") < col("comp")).as("_changed"))
+      .withColumn(SuperstepLoop.ActiveCol, coalesce(col("_changed"), lit(false)))
+      .drop("_changed")
   }
 
   /** Star-contraction WCC (alternating large-star / small-star, Kiveris et

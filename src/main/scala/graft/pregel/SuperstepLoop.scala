@@ -146,32 +146,34 @@ object SuperstepLoop {
     *    pre-partitioned by src — so the exchange-free path is strictly better.
     *    (Explicit `broadcast()` hints — the hub-frontier and L2-scalar
     *    broadcasts — still apply; only automatic selection is off.)
-    *  - shuffled hash join preferred over sort-merge: the co-partitioned
-    *    joins then skip per-superstep sorts of the edge table
+    *  - a threshold of -1 also stops Spark choosing a shuffled hash join by
+    *    size (it needs size < threshold × shuffle partitions), so every
+    *    unhinted join is a sort-merge join. Step bodies that must not sort
+    *    the edge table every superstep hint `shuffle_hash` on their V-row
+    *    side (PageRank.step, Wcc.step, LabelPropagation.syncStep).
     */
   private def withLoopConf[A](spark: SparkSession, cfg: LoopConfig)(body: => A): A =
     withIterationConf(spark, disable = cfg.disableAqeInLoop,
       width = cfg.shuffleWidth)(body)
 
   /** Same conf scoping for iterative algorithms that drive their own loop
-    * (Louvain, kNN): AQE + auto-broadcast + sort-merge preference off for
-    * the loop's jobs, previous settings restored after. `width` additionally
-    * scopes `spark.sql.shuffle.partitions` (see GraphOps.adaptiveParts) —
+    * (MsBfs, MaxKCut): AQE + auto-broadcast off for the loop's jobs (joins
+    * that should hash instead of sort carry a `shuffle_hash` hint), previous
+    * settings restored after. `width` additionally scopes
+    * `spark.sql.shuffle.partitions` (see GraphOps.adaptiveParts) —
     * physical planning happens at each materialize, i.e. inside this scope,
     * so every groupBy/join shuffle in the loop gets the data-sized width. */
   private[graft] def withIterationConf[A](spark: SparkSession,
                                           disable: Boolean = true,
                                           width: Option[Int] = None)(body: => A): A = {
     val keys = Seq("spark.sql.adaptive.enabled",
-      "spark.sql.autoBroadcastJoinThreshold", "spark.sql.join.preferSortMergeJoin",
-      "spark.sql.shuffle.partitions")
+      "spark.sql.autoBroadcastJoinThreshold", "spark.sql.shuffle.partitions")
     val prev = keys.map(k => k -> spark.conf.getOption(k))
     if (disable) {
       spark.conf.set(keys(0), "false")
       spark.conf.set(keys(1), "-1")
-      spark.conf.set(keys(2), "false")
     }
-    width.foreach(w => spark.conf.set(keys(3), w.toString))
+    width.foreach(w => spark.conf.set(keys(2), w.toString))
     try body finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None)    => spark.conf.unset(k)

@@ -63,6 +63,17 @@ class LabelPropagationSpec extends AnyFunSuite with SparkTestBase {
       s"got $labels")
   }
 
+  test("sync labels are identical at 2 and 7 partitions") {
+    for (iterations <- Seq(1, 2, 50)) {
+      def at(p: Int) = {
+        val r = LabelPropagation.run(graph,
+          LpConfig(maxIterations = iterations, numPartitions = Some(p)))
+        (collectLongMap(r.labels, "id", "label"), r.ranIterations, r.didConverge)
+      }
+      assert(at(2) == at(7), s"maxIterations $iterations")
+    }
+  }
+
   test("seed init rule: missing seeds get maxSeenSeed + originalId + 1") {
     import spark.implicits._
     // node 2 has no seed; maxSeen = 7 -> its init label = 7 + 2 + 1 = 10.

@@ -51,6 +51,15 @@ class PageRankSpec extends AnyFunSuite with SparkTestBase {
       assert(math.abs(f(id) - v) < 1e-12, s"node $id fused=${f(id)} base=$v") }
   }
 
+  test("scores agree within 1e-12 at 2 and 7 partitions") {
+    def at(p: Int) = collectMap(PageRank.run(graph, PageRankConfig(tolerance = 0.0,
+      maxIterations = 20, numPartitions = Some(p))).scores, "id", "score")
+    val (two, seven) = (at(2), at(7))
+    assert(two.keySet == seven.keySet)
+    two.foreach { case (id, v) =>
+      assert(math.abs(seven(id) - v) <= 1e-12, s"node $id p=7 ${seven(id)} p=2 $v") }
+  }
+
   test("iterations-to-tolerance parity: tol 0.5 -> 2, tol 0.1 -> 13") {
     val r1 = PageRank.run(graph, PageRankConfig(tolerance = 0.5, maxIterations = 40))
     assert(r1.ranIterations == 2, s"tol=0.5 expected 2 got ${r1.ranIterations}")

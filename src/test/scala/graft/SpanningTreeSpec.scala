@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.GraftTestAccess
 import org.scalatest.funsuite.AnyFunSuite
 import graft.algo.SpanningTree
 
@@ -43,6 +44,21 @@ class SpanningTreeSpec extends AnyFunSuite with SparkTestBase {
     val dist = SpanningTree.run(g, startNode = None, localSolveThreshold = 0L)
     val local = SpanningTree.run(g, startNode = None)
     assert(treeSet(dist.treeEdges) == treeSet(local.treeEdges))
+  }
+
+  test("distributed and local paths leave no cache entries behind") {
+    val g = weightedGraphOf(7, fixtureEdges :+ (5L, 6L, 7.0))
+    // a path graph makes the distributed path pointer-jump more than once
+    val path = weightedGraphOf(16, (0L until 15L).map(i => (i, i + 1, 1.0 + i)))
+    for ((graph, threshold) <- Seq((g, 0L), (path, 0L), (g, 100000L))) {
+      val before = GraftTestAccess.cachedEntries(spark)
+      val r = SpanningTree.run(graph, startNode = None, localSolveThreshold = threshold)
+      r.treeEdges.count()
+      // the result itself is persisted for the caller; nothing else may stay
+      r.treeEdges.unpersist(true)
+      assert(GraftTestAccess.cachedEntries(spark) <= before,
+        s"threshold $threshold: ${GraftTestAccess.cachedEntries(spark) - before} entries leaked")
+    }
   }
 
   test("kSpanningTree cuts the heaviest edges into k clusters") {

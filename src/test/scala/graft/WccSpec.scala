@@ -38,6 +38,14 @@ class WccSpec extends AnyFunSuite with SparkTestBase {
     assert(fused.didConverge)
   }
 
+  test("components are identical at 2 and 7 partitions") {
+    def at(p: Int) = {
+      val r = Wcc.run(graph, WccConfig(numPartitions = Some(p)))
+      (collectLongMap(r.components, "id", "componentId"), r.ranIterations)
+    }
+    assert(at(2) == at(7))
+  }
+
   test("orientation-independent: reversed edges give identical components") {
     val rev = graph.copy(edges = graph.edges.select(
       col("dst").as("src"), col("src").as("dst")))
