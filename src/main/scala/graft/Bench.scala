@@ -64,18 +64,32 @@ object Bench {
       if (names.intersect(SparkEntry.queries.keySet).isEmpty)
         System.err.println("[bench] WARNING: filter selected ZERO queries — timings below are empty")
     }
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
+    // A query that throws gets no timing: it is left out of the timings and
+    // the total, and named with its exception in the detail line's `errors`.
+    val outcomes = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, fn) =>
         val q0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        name -> (System.nanoTime() - q0) / 1e9
+        try { fn(spark, sfDir).count(); name -> Right((System.nanoTime() - q0) / 1e9) }
+        catch { case e: Throwable => name -> Left(e) }
       }
+    val results = outcomes.collect { case (n, Right(secs)) => n -> secs }
+    val errors  = outcomes.collect { case (n, Left(e)) => n -> e }
     val total = results.map(_._2).sum
     spark.stop()
 
     def toJson(rs: Seq[(String, Double)]): String =
       rs.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
+    def jsonString(s: String): String = "\"" + s.flatMap {
+      case '"'  => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c    => c.toString
+    } + "\""
+    val errorsJson = errors.map { case (n, e) =>
+      s"""{"query":${jsonString(n)},"error":${jsonString(
+        (e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage)).take(300))}}"""
+    }.mkString("[", ",", "]")
 
     // Full per-query detail on its OWN line: the driver captures only the
     // LAST ~2000 chars of output, so the machine-parsed contract line (below)
@@ -83,7 +97,7 @@ object Bench {
     // ~2.7k-char line and the driver recorded parsed=null both times). The
     // detail line may scroll out of the tail; the contract line carries the
     // total, a representative headline subset, and the scaling blocks.
-    println(s"""{"metric":"queries_full","unit":"sec","queries":${toJson(results)},"sf":"$sfDir"}""")
+    println(s"""{"metric":"queries_full","unit":"sec","queries":${toJson(results)},"sf":"$sfDir","errors":$errorsJson}""")
 
     val headline = Seq(
       "q_pagerank", "q_wcc", "q_scc", "q_labelprop", "q_louvain",

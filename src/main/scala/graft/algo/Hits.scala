@@ -49,10 +49,8 @@ object Hits {
     // on dst — co-partitioned joins both ways instead of re-shuffling the
     // edge table every half-iteration (the 100-TB shape: edge storage is
     // cheap next to 20x2 repeated shuffles of it).
-    val edges = graph.edges.select("src", "dst")
-      .repartition(parts, col("src")).persist()
-    val edgesByDst = graph.edges.select("src", "dst")
-      .repartition(parts, col("dst")).persist()
+    val edges = SuperstepLoop.persistInput(graph.edges.select("src", "dst"), parts, "src")
+    val edgesByDst = SuperstepLoop.persistInput(graph.edges.select("src", "dst"), parts, "dst")
 
     val init = graph.vertices.select("id")
       .repartition(parts, col("id"))

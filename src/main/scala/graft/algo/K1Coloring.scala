@@ -131,9 +131,10 @@ object K1Coloring {
                            parts: Int): (DataFrame, graft.pregel.LoopResult) = {
     val spark = graph.edges.sparkSession
     val undirected = GraphOps.canonicalUndirected(graph.edges)
-    val edges = undirected.select(col("lo").as("src"), col("hi").as("dst"))
-      .unionByName(undirected.select(col("hi").as("src"), col("lo").as("dst")))
-      .repartition(parts, col("src")).persist()
+    val edges = SuperstepLoop.persistInput(
+      undirected.select(col("lo").as("src"), col("hi").as("dst"))
+        .unionByName(undirected.select(col("hi").as("src"), col("lo").as("dst"))),
+      parts, "src")
 
     val init = graph.vertices.select("id")
       .repartition(parts, col("id"))

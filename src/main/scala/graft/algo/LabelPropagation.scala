@@ -153,14 +153,8 @@ object LabelPropagation {
     val parts = cfg.numPartitions.getOrElse(
       GraphOps.adaptiveParts(spark, graph.edges.count()))
 
-    val edges = weightedEdges(graph, cfg)
-      .repartition(parts, col("dst"))
-      .persist()
-
-    val init = graph.vertices
-      .repartition(parts, col("id"))
-      .select(col("id"), initLabelCol(graph.vertices, cfg).as("label"),
-              lit(true).as(SuperstepLoop.ActiveCol))
+    val edges = voteEdges(weightedEdges(graph, cfg), parts)
+    val init = initState(graph.vertices, cfg, parts)
 
     val loopCfg = LoopConfig(cfg.maxIterations, cfg.checkpointDir, cfg.checkpointInterval,
       shuffleWidth = Some(parts))
@@ -168,6 +162,21 @@ object LabelPropagation {
     edges.unpersist(false)
     LpResult(result.state.select("id", "label"), result.ranIterations, result.didConverge)
   }
+
+  /** The weighted (src, dst, weight) vote edges, persisted and partitioned
+    * by dst: each iteration joins them to the state on dst with no exchange. */
+  private[graft] def voteEdges(weighted: DataFrame, parts: Int): DataFrame =
+    SuperstepLoop.persistInput(weighted, parts, "dst")
+
+  /** Initial state (id, label, _active), partitioned by id AFTER the
+    * projection: with no seed property `label` is `id AS label`, and an
+    * id-partitioned child would leave a partitioning that plan truncation
+    * reads as `hashpartitioning(label)`. */
+  private[graft] def initState(vertices: DataFrame, cfg: LpConfig, parts: Int): DataFrame =
+    vertices
+      .select(col("id"), initLabelCol(vertices, cfg).as("label"),
+              lit(true).as(SuperstepLoop.ActiveCol))
+      .repartition(parts, col("id"))
 
   /** One Sync/FullSync iteration over `state` (id, label, _active),
     * hash-partitioned by id into `parts` like the dst-partitioned `edges`.

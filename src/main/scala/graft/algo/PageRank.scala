@@ -94,8 +94,6 @@ object PageRank {
     val parts = cfg.numPartitions.getOrElse(
       GraphOps.adaptiveParts(spark, graph.edges.count()))
     GraphOps.withShuffleWidth(spark, parts) {
-    val alpha = 1.0 - cfg.dampingFactor
-
     val vertices = graph.vertices.select("id")
     val edgesW   = GraphOps.withWeight(graph.edges)
 
@@ -132,26 +130,8 @@ object PageRank {
       case None => (normEdges, None)
     }
 
-    // One persisted, src-partitioned table carrying BOTH the real messages
-    // (norm != null) and the per-node self-loop carrier rows (norm == null);
-    // the carrier row is what moves a node's own rank through the single
-    // superstep aggregation.
-    val augEdges = mainNormEdges.select(col("src"), col("dst"), col("norm"))
-      .unionByName(vertices.select(col("id").as("src"), col("id").as("dst"),
-        lit(null).cast("double").as("norm")))
-      .repartition(parts, col("src"))
-      .persist()
-
-    // Initial state (superstep 0): everyone is "active" — the reference's
-    // initial superstep sends unconditionally and nobody votes to halt
-    // (PageRankComputation.java:94-98, ComputeStep.java:85-101).
-    val initRank =
-      if (cfg.sourceNodes.isEmpty) lit(alpha)
-      else when(col("id").isInCollection(cfg.sourceNodes), lit(alpha)).otherwise(lit(0.0))
-    val init = vertices
-      .repartition(parts, col("id"))
-      .select(col("id"), initRank.as("rank"), initRank.as("delta"),
-              lit(true).as(SuperstepLoop.ActiveCol))
+    val augEdges = augmentedEdges(mainNormEdges, vertices, parts)
+    val init = initState(vertices, cfg, parts)
 
     val loopCfg = LoopConfig(
       maxSteps = cfg.maxIterations - 1,
@@ -173,6 +153,34 @@ object PageRank {
       if (result.didConverge) result.ranIterations else cfg.maxIterations,
       result.didConverge)
     }
+  }
+
+  /** One persisted, src-partitioned table carrying BOTH the real messages
+    * (norm != null) and the per-node self-loop carrier rows (norm == null);
+    * the carrier row is what moves a node's own rank through the single
+    * superstep aggregation. */
+  private[graft] def augmentedEdges(normEdges: DataFrame, vertices: DataFrame,
+                                    parts: Int): DataFrame =
+    SuperstepLoop.persistInput(
+      normEdges.select(col("src"), col("dst"), col("norm"))
+        .unionByName(vertices.select(col("id").as("src"), col("id").as("dst"),
+          lit(null).cast("double").as("norm"))),
+      parts, "src")
+
+  /** Initial state (superstep 0), hash-partitioned by id: everyone is
+    * "active" — the reference's initial superstep sends unconditionally and
+    * nobody votes to halt (PageRankComputation.java:94-98,
+    * ComputeStep.java:85-101). */
+  private[graft] def initState(vertices: DataFrame, cfg: PageRankConfig,
+                               parts: Int): DataFrame = {
+    val alpha = 1.0 - cfg.dampingFactor
+    val initRank =
+      if (cfg.sourceNodes.isEmpty) lit(alpha)
+      else when(col("id").isInCollection(cfg.sourceNodes), lit(alpha)).otherwise(lit(0.0))
+    vertices
+      .select(col("id"), initRank.as("rank"), initRank.as("delta"),
+              lit(true).as(SuperstepLoop.ActiveCol))
+      .repartition(parts, col("id"))
   }
 
   /** One superstep over `state` (id, rank, delta, _active), hash-partitioned

@@ -50,9 +50,11 @@ object Scc {
     // per round even though all inputs are cached (measured: 25 s of pure
     // driver planning per rebuild count by outer round 2 on a 400-node graph).
     var remVHandle = graph.vertices.select("id").persist()
+    // repartition BEFORE distinct: hash(src) clusters equal pairs, so the
+    // dedup reuses that exchange
     var remEHandle = graph.edges.select("src", "dst")
-      .filter(col("src") =!= col("dst")).distinct()
-      .repartition(parts, col("src")).persist()
+      .filter(col("src") =!= col("dst"))
+      .repartition(parts, col("src")).distinct().persist()
     remVHandle.count(); remEHandle.count()
     var remV = GraftSqlCompat.truncatePlan(remVHandle)
     var remE = GraftSqlCompat.truncatePlan(remEHandle)
@@ -125,13 +127,14 @@ object Scc {
         .select(col("id"), col("id").as("sccId")).persist()
       if (phase("trim")(trimmed.count()) > 0) {
         pieces ::= trimmed
-        val newV = remV.join(trimmed.select("id"), Seq("id"), "left_anti")
-          .repartition(p, col("id")).persist()
-        val newE = remE
+        // the coloring fixpoint below joins these from its first superstep:
+        // persistInput keeps their partitioning visible to it
+        val newV = SuperstepLoop.persistInput(
+          remV.join(trimmed.select("id"), Seq("id"), "left_anti"), p, "id")
+        val newE = SuperstepLoop.persistInput(remE
           .join(newV.select(col("id").as("src")), Seq("src"), "left_semi")
           .join(newV.select(col("id").as("dst")), Seq("dst"), "left_semi")
-          .select("src", "dst")
-          .repartition(p, col("src")).persist()
+          .select("src", "dst"), p, "src")
         remaining = phase("trim-rebuild") { val r = newV.count(); newE.count(); r }
         remVHandle.unpersist(false); remEHandle.unpersist(false)
         remVHandle = newV; remEHandle = newE

@@ -35,9 +35,8 @@ object Sllpa {
       return runLocal(graph, maxIterations, minAssociationStrength, seed)
     val parts = GraphOps.adaptiveParts(spark, edgeCount)
 
-    val edges = graph.orientedEdges(Orientation.Undirected)
-      .select("src", "dst").filter(col("src") =!= col("dst")).distinct()
-      .repartition(parts, col("src")).persist()
+    val edges = SuperstepLoop.persistInput(graph.orientedEdges(Orientation.Undirected)
+      .select("src", "dst").filter(col("src") =!= col("dst")), parts, "src", distinct = true)
     edges.count()
 
     val init = graph.vertices

@@ -60,22 +60,8 @@ object Wcc {
       case Some(t) => GraphOps.withWeight(graph.edges).filter(col("weight") > lit(t))
       case None    => graph.edges
     }
-    // Undirected view: orientation does not change WCC results (reference
-    // WccTest.java asserts NATURAL/REVERSE/UNDIRECTED parity).
-    val undirected = base.select("src", "dst")
-      .unionByName(base.select(col("dst").as("src"), col("src").as("dst")))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-      .repartition(parts, col("src"))
-      .persist()
-
-    val initComp = cfg.seedProperty match {
-      case Some(p) => least(col("id"), coalesce(col(p).cast("long"), col("id")))
-      case None    => col("id")
-    }
-    val init = graph.vertices
-      .repartition(parts, col("id"))
-      .select(col("id"), initComp.as("comp"), lit(true).as(SuperstepLoop.ActiveCol))
+    val undirected = undirectedEdges(base, parts)
+    val init = initState(graph.vertices, cfg.seedProperty, parts)
 
     val loopCfg = LoopConfig(cfg.maxSteps, cfg.checkpointDir, cfg.checkpointInterval,
       fusedSteps = cfg.fusedSteps, shuffleWidth = Some(parts))
@@ -84,6 +70,31 @@ object Wcc {
 
     val comps = result.state.select(col("id"), col("comp").as("componentId"))
     finish(comps, cfg, result.ranIterations, result.didConverge)
+  }
+
+  /** Undirected, loop-free, deduplicated view of `base` (src, dst),
+    * persisted and partitioned by src; the dedup reuses that exchange.
+    * Orientation does not change WCC results (reference WccTest.java
+    * asserts NATURAL/REVERSE/UNDIRECTED parity). */
+  private[graft] def undirectedEdges(base: DataFrame, parts: Int): DataFrame =
+    SuperstepLoop.persistInput(
+      base.select("src", "dst")
+        .unionByName(base.select(col("dst").as("src"), col("src").as("dst")))
+        .filter(col("src") =!= col("dst")),
+      parts, "src", distinct = true)
+
+  /** Initial hash-min state (id, comp, _active), partitioned by id AFTER the
+    * projection: `id AS comp` over an id-partitioned child would leave a
+    * partitioning that plan truncation reads as `hashpartitioning(comp)`. */
+  private[graft] def initState(vertices: DataFrame, seedProperty: Option[String],
+                               parts: Int): DataFrame = {
+    val initComp = seedProperty match {
+      case Some(p) => least(col("id"), coalesce(col(p).cast("long"), col("id")))
+      case None    => col("id")
+    }
+    vertices
+      .select(col("id"), initComp.as("comp"), lit(true).as(SuperstepLoop.ActiveCol))
+      .repartition(parts, col("id"))
   }
 
   /** One hash-min superstep over `state` (id, comp, _active), hash-partitioned
@@ -139,10 +150,7 @@ object Wcc {
       case None => thresholded
     }
     // Symmetric, loop-free initial edge multiset (kept deduped per round).
-    var edges = base.select("src", "dst")
-      .unionByName(base.select(col("dst").as("src"), col("src").as("dst")))
-      .filter(col("src") =!= col("dst")).distinct()
-      .repartition(parts, col("src")).persist()
+    var edges = undirectedEdges(base, parts)
     var rounds = 0
 
     // One phase: for each node u with neighbor set N(u),

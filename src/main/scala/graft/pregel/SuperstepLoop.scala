@@ -101,7 +101,13 @@ final case class LoopResult(
   * Shuffle discipline: the driver never repartitions state; each step is
   * expected to produce state hash-partitioned by id (the natural output of
   * its groupBy), so the next step's join against edges pre-partitioned on src
-  * reuses partitioning instead of adding exchanges.
+  * reuses partitioning instead of adding exchanges. Edge tables are
+  * persisted through [[persistInput]], whose cached plan is non-adaptive:
+  * an adaptive one hides its partitioning until the cache is built, and
+  * superstep 1 would shuffle the edge table again. The initial state must be
+  * partitioned by `id` after its final projection: a projection that also
+  * aliases `id` (`id AS comp`) leaves a partitioning that plan truncation
+  * reads as `hashpartitioning(comp)`.
   */
 object SuperstepLoop {
 
@@ -166,18 +172,43 @@ object SuperstepLoop {
   private[graft] def withIterationConf[A](spark: SparkSession,
                                           disable: Boolean = true,
                                           width: Option[Int] = None)(body: => A): A = {
-    val keys = Seq("spark.sql.adaptive.enabled",
-      "spark.sql.autoBroadcastJoinThreshold", "spark.sql.shuffle.partitions")
-    val prev = keys.map(k => k -> spark.conf.getOption(k))
-    if (disable) {
-      spark.conf.set(keys(0), "false")
-      spark.conf.set(keys(1), "-1")
-    }
-    width.foreach(w => spark.conf.set(keys(2), w.toString))
+    val off =
+      if (disable) Seq(AqeKey -> "false", "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+      else Nil
+    withConf(spark, off ++ width.map("spark.sql.shuffle.partitions" -> _.toString))(body)
+  }
+
+  private val AqeKey = "spark.sql.adaptive.enabled"
+
+  /** Runs `body` with `settings` applied, restoring each key's previous
+    * value (or unsetting it) afterwards. */
+  private[graft] def withConf[A](spark: SparkSession, settings: Seq[(String, String)])
+                                 (body: => A): A = {
+    val prev = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
     try body finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None)    => spark.conf.unset(k)
     }
+  }
+
+  /** Persist a superstep input hash-partitioned by `key` into `parts`
+    * (`distinct` dedups on that same exchange: equal rows share a key, so
+    * the aggregate needs no exchange of its own).
+    *
+    * The cache entry is planned with adaptive execution off, and only the
+    * `persist` call sees that setting. An adaptive cached plan reports
+    * UnknownPartitioning until the cache has been built, so the first
+    * superstep planned over it (before any action has run) would shuffle
+    * the whole input a second time. A non-adaptive cached plan reports
+    * `hashpartitioning(key, parts)` from the start, and every superstep
+    * joins it without an exchange. The broadcast threshold is left alone,
+    * so setup joins upstream of the repartition keep their plans. */
+  private[graft] def persistInput(df: DataFrame, parts: Int, key: String,
+                                  distinct: Boolean = false): DataFrame = {
+    val parted = df.repartition(parts, col(key))
+    val input = if (distinct) parted.distinct() else parted
+    withConf(df.sparkSession, Seq(AqeKey -> "false"))(input.persist())
   }
 
   /** Materialize `df` (persist) and return its active count — ONE action:

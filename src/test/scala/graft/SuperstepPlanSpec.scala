@@ -1,35 +1,32 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, GraftSqlCompat}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.algo.{LabelPropagation, PageRank, PageRankConfig, Schedule, Wcc}
+import graft.algo.{LabelPropagation, LpConfig, PageRank, PageRankConfig, Schedule, Wcc}
 import graft.pregel.SuperstepLoop
 
-/** Physical shape of one PageRank, WCC and LP superstep, planned under the
-  * loop's conf over state as the loop hands it to a step (persisted,
-  * plan-truncated, hash-partitioned by id) and edge tables persisted and
-  * partitioned the way the algorithms build them. Each superstep must hash
-  * its joins (no sort-merge join re-sorting the edge table every superstep)
-  * and shuffle exactly once. */
+/** Physical shape of superstep 1 of PageRank, WCC and LP, built the way
+  * `run` builds it: the edge inputs and the initial state come from the
+  * algorithms' own builders, set up with adaptive execution ON (a default
+  * session) and never warmed by an action, and the state is persisted and
+  * plan-truncated under the loop's conf, as the loop hands it to a step.
+  * Each superstep must hash its joins (no sort-merge join re-sorting the
+  * edge table every superstep) and shuffle exactly once: the persisted edge
+  * table and the state must both report their partitioning from the first
+  * plan, or superstep 1 re-shuffles them. */
 class SuperstepPlanSpec extends AnyFunSuite with SparkTestBase {
 
   private val parts = 3
 
   private val edgeList: Seq[(Long, Long)] = Seq(
     0L -> 1L, 1L -> 2L, 2L -> 0L, 2L -> 3L, 3L -> 4L, 4L -> 5L, 5L -> 3L, 6L -> 0L)
-
-  private def persisted(df: DataFrame, key: String): DataFrame = {
-    val p = df.repartition(parts, col(key)).persist()
-    p.count()
-    p
-  }
-
-  private def loopState(df: DataFrame): DataFrame =
-    GraftSqlCompat.truncatePlan(persisted(df, "id"))
 
   private def edges: DataFrame = {
     import spark.implicits._
@@ -38,9 +35,28 @@ class SuperstepPlanSpec extends AnyFunSuite with SparkTestBase {
 
   private def vertices: DataFrame = spark.range(7).toDF("id")
 
+  /** Runs `setup` with adaptive execution on; the suite's session has it
+    * off, which would hide an adaptive cached plan. */
+  private def adaptive[A](setup: => A): A =
+    SuperstepLoop.withConf(spark, Seq("spark.sql.adaptive.enabled" -> "true"))(setup)
+
+  /** (persisted handle, plan-truncated view) of `init`, as the loop holds it
+    * before superstep 1. */
+  private def loopState(init: DataFrame): (DataFrame, DataFrame) =
+    SuperstepLoop.withIterationConf(spark, width = Some(parts)) {
+      val cached = init.persist()
+      (cached, GraftSqlCompat.truncatePlan(cached))
+    }
+
   private def plannedStep(step: => DataFrame): SparkPlan =
     SuperstepLoop.withIterationConf(spark, width = Some(parts)) {
       step.queryExecution.executedPlan
+    }
+
+  private def assertIdPartitioned(name: String, state: DataFrame): Unit =
+    state.queryExecution.executedPlan.outputPartitioning match {
+      case HashPartitioning(Seq(a: Attribute), n) if a.name == "id" && n == parts =>
+      case other => fail(s"$name initial state reports $other, expected hashpartitioning(id, $parts)")
     }
 
   private def assertShape(name: String, plan: SparkPlan): Unit = {
@@ -52,35 +68,56 @@ class SuperstepPlanSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("PageRank superstep: hash join on the state, one exchange") {
-    val deg = edges.groupBy("src").agg(count(lit(1)).cast("double").as("deg"))
-    val augEdges = persisted(
-      edges.join(deg, "src").select(col("src"), col("dst"), (lit(1.0) / col("deg")).as("norm"))
-        .unionByName(vertices.select(col("id").as("src"), col("id").as("dst"),
-          lit(null).cast("double").as("norm"))),
-      "src")
-    val state = loopState(vertices.select(col("id"), lit(0.15).as("rank"),
-      lit(0.15).as("delta"), lit(true).as(SuperstepLoop.ActiveCol)))
+    val (augEdges, (cached, state)) = adaptive {
+      val deg = edges.groupBy("src").agg(count(lit(1)).cast("double").as("deg"))
+      val norm = edges.join(deg, "src")
+        .select(col("src"), col("dst"), (lit(1.0) / col("deg")).as("norm"))
+      (PageRank.augmentedEdges(norm, vertices, parts),
+       loopState(PageRank.initState(vertices, PageRankConfig(), parts)))
+    }
+    assertIdPartitioned("PageRank", state)
     assertShape("PageRank", plannedStep(
       PageRank.step(augEdges, None, PageRankConfig(), 1.0)(state, 1)))
-    augEdges.unpersist(false)
+    augEdges.unpersist(false); cached.unpersist(false)
   }
 
   test("WCC superstep: hash joins on the frontier and the minimum, one exchange") {
-    val undirected = persisted(
-      edges.unionByName(edges.select(col("dst").as("src"), col("src").as("dst"))), "src")
-    val state = loopState(vertices.select(col("id"), col("id").as("comp"),
-      lit(true).as(SuperstepLoop.ActiveCol)))
+    val (undirected, (cached, state)) = adaptive {
+      (Wcc.undirectedEdges(edges, parts), loopState(Wcc.initState(vertices, None, parts)))
+    }
+    assertIdPartitioned("WCC", state)
     assertShape("WCC", plannedStep(Wcc.step(undirected)(state)))
-    undirected.unpersist(false)
+    undirected.unpersist(false); cached.unpersist(false)
   }
 
   test("LP superstep: hash joins on the labels and the votes, one exchange") {
-    val weighted = persisted(edges.withColumn("weight", lit(1.0)), "dst")
-    val state = loopState(vertices.select(col("id"), col("id").as("label"),
-      lit(true).as(SuperstepLoop.ActiveCol)))
+    val (votes, (cached, state)) = adaptive {
+      (LabelPropagation.voteEdges(edges.withColumn("weight", lit(1.0)), parts),
+       loopState(LabelPropagation.initState(vertices, LpConfig(), parts)))
+    }
+    assertIdPartitioned("LP", state)
     for (schedule <- Seq(Schedule.Sync, Schedule.FullSync))
       assertShape(s"LP $schedule", plannedStep(
-        LabelPropagation.syncStep(weighted, schedule, parts)(state, 1)))
-    weighted.unpersist(false)
+        LabelPropagation.syncStep(votes, schedule, parts)(state, 1)))
+    votes.unpersist(false); cached.unpersist(false)
+  }
+
+  test("persistInput dedups on its own exchange and restores adaptive execution") {
+    adaptive {
+      val dup = edges.unionByName(edges)
+      val input = SuperstepLoop.persistInput(dup, parts, "src", distinct = true)
+      assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+      val plan = input.queryExecution.executedPlan
+      assert(plan.outputPartitioning match {
+        case HashPartitioning(Seq(a: Attribute), n) => a.name == "src" && n == parts
+        case _ => false
+      }, s"persisted input reports ${plan.outputPartitioning}")
+      val cachedPlan = plan.collectFirst { case s: InMemoryTableScanExec => s.relation.cachedPlan }
+        .getOrElse(fail(s"no cache scan in\n$plan"))
+      val exchanges = cachedPlan.collect { case e: ShuffleExchangeExec => e }
+      assert(exchanges.size == 1, s"dedup adds an exchange:\n$cachedPlan")
+      assert(input.count() == edgeList.size)
+      input.unpersist(false)
+    }
   }
 }
