@@ -219,17 +219,23 @@ object Warc {
     * opened as a Hadoop input stream and parsed record-by-record; the stream
     * closes at parse end, with a task-completion listener as the backstop
     * for consumers that stop early (e.g. limit). Read telemetry lands in
-    * the session's [[readMetrics]] accumulators. */
+    * the session's [[readMetrics]] accumulators.
+    *
+    * The Hadoop configuration is broadcast rather than captured: this
+    * closure stays in the RDD lineage of everything derived from the read,
+    * cached frames included, so a captured configuration would be
+    * deserialized again by every task of every later stage (hundreds of
+    * properties, each a gzip stream ending in a thrown EOFException). */
   private def parsePaths(files: DataFrame, spark: SparkSession): DataFrame = {
     val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(readSchema)
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.broadcast(new org.apache.spark.util.SerializableConfiguration(
+      spark.sparkContext.hadoopConfiguration))
     val m = readMetrics(spark)
     files.mapPartitions { rows =>
       rows.flatMap { r =>
         val p = new org.apache.hadoop.fs.Path(r.getString(0))
         val fileLen = r.getLong(1)
-        val raw = p.getFileSystem(conf.value).open(p)
+        val raw = p.getFileSystem(conf.value.value).open(p)
         val tc = org.apache.spark.TaskContext.get()
         if (tc != null) tc.addTaskCompletionListener[Unit] { _ =>
           try raw.close() catch { case _: java.io.IOException => () }
