@@ -131,7 +131,7 @@ object PageRank {
     }
 
     val augEdges = augmentedEdges(mainNormEdges, vertices, parts)
-    val init = initState(vertices, cfg, parts)
+    val init = initState(augEdges, cfg)
 
     val loopCfg = LoopConfig(
       maxSteps = cfg.maxIterations - 1,
@@ -167,20 +167,20 @@ object PageRank {
           lit(null).cast("double").as("norm"))),
       parts, "src")
 
-  /** Initial state (superstep 0), hash-partitioned by id: everyone is
-    * "active" — the reference's initial superstep sends unconditionally and
-    * nobody votes to halt (PageRankComputation.java:94-98,
-    * ComputeStep.java:85-101). */
-  private[graft] def initState(vertices: DataFrame, cfg: PageRankConfig,
-                               parts: Int): DataFrame = {
+  /** Initial state (superstep 0): everyone is "active" — the reference's
+    * initial superstep sends unconditionally and nobody votes to halt
+    * (PageRankComputation.java:94-98, ComputeStep.java:85-101). One row per
+    * carrier row of `augEdges`, so it inherits that table's src
+    * partitioning as `hashpartitioning(id)` with no exchange of its own. */
+  private[graft] def initState(augEdges: DataFrame, cfg: PageRankConfig): DataFrame = {
     val alpha = 1.0 - cfg.dampingFactor
     val initRank =
       if (cfg.sourceNodes.isEmpty) lit(alpha)
       else when(col("id").isInCollection(cfg.sourceNodes), lit(alpha)).otherwise(lit(0.0))
-    vertices
+    augEdges.filter(col("norm").isNull)
+      .select(col("src").as("id"))
       .select(col("id"), initRank.as("rank"), initRank.as("delta"),
               lit(true).as(SuperstepLoop.ActiveCol))
-      .repartition(parts, col("id"))
   }
 
   /** One superstep over `state` (id, rank, delta, _active), hash-partitioned

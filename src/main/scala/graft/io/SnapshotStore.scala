@@ -30,8 +30,12 @@ object SnapshotStore {
 
   /** Write `df` as the next snapshot of the table at `dir`. Returns the
     * committed snapshot. `meta` is carried verbatim in the manifest (the
-    * per-iteration convergence metrics / lineage live here). */
-  def commit(df: DataFrame, dir: String, meta: Map[String, String] = Map.empty): Snapshot = {
+    * per-iteration convergence metrics / lineage live here). It is
+    * evaluated after the data write and before the manifest rename, so it
+    * may hold figures the write itself produces (the superstep loop's
+    * active count, observed on this write); a kill at any point before the
+    * rename leaves the previous snapshot as the latest. */
+  def commit(df: DataFrame, dir: String, meta: => Map[String, String] = Map.empty): Snapshot = {
     val version  = latest(dir).map(_.version + 1).getOrElse(0L)
     val dataPath = Paths.get(dir, "data", s"v$version").toString
     df.write.mode("overwrite").parquet(dataPath)

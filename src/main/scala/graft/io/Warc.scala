@@ -65,7 +65,13 @@ object Warc {
     *    header block, unparseable Content-Length, truncated payload)
     *  - `corruptTailBytes`: approximate raw (on-disk) bytes left unread in
     *    those files — approximate because decompression/buffering read
-    *    ahead of the parse position; never negative. */
+    *    ahead of the parse position; never negative.
+    *
+    * The counters are at-least-once: they are bumped inside the parse, not
+    * in an action, so every task attempt that parses a file adds to them —
+    * retried and speculative attempts, and each recomputation of a read
+    * that is not persisted. Compare them against one action over a
+    * persisted read, or treat them as upper bounds. */
   final case class ReadMetrics(
       records: org.apache.spark.util.LongAccumulator,
       skippedNonResponse: org.apache.spark.util.LongAccumulator,
@@ -76,8 +82,11 @@ object Warc {
       corruptTailFiles, corruptTailBytes).foreach(_.reset())
   }
 
-  private val metricsBySession =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, ReadMetrics]()
+  /** Weakly keyed: an entry goes once its session is unreachable, so
+    * stopped sessions are not pinned (with their accumulators) for the
+    * life of the JVM. */
+  private val metricsBySession = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, ReadMetrics]())
 
   /** The session's WARC read counters (created on first use; named, so they
     * also appear in the Spark UI's accumulator table per stage). */

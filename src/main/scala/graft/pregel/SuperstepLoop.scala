@@ -1,6 +1,6 @@
 package graft.pregel
 
-import org.apache.spark.sql.{DataFrame, GraftSqlCompat, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlCompat, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.io.SnapshotStore
@@ -16,14 +16,24 @@ import graft.io.SnapshotStore
   *                           (Iceberg-style, see [[graft.io.SnapshotStore]])
   *                           with convergence metrics in the manifest; a run
   *                           can resume from the latest committed snapshot.
+  *                           The snapshot is for durability only: its parquet
+  *                           write is the one job that fills the next state's
+  *                           cache (the active count is observed on that same
+  *                           write), and the loop goes on from the persisted,
+  *                           still id-partitioned state, never from the files.
+  *                           A run that converges between intervals commits
+  *                           its final state too.
   * @param checkpointInterval snapshot cadence (1 = every iteration, the
   *                           north-rule default).
-  * @param truncateInterval   RDD-lineage cut cadence via localCheckpoint when
-  *                           no durable checkpointing is active. (The LOGICAL
-  *                           plan is already truncated every iteration at
-  *                           zero cost — see [[GraftSqlCompat.truncatePlan]]
-  *                           — but task closures serialize the physical RDD
-  *                           chain, which must be cut periodically too.)
+  * @param truncateInterval   RDD-lineage cut cadence via localCheckpoint,
+  *                           with or without durable checkpoints. (The
+  *                           LOGICAL plan is already truncated every
+  *                           iteration at zero cost — see
+  *                           [[GraftSqlCompat.truncatePlan]] — but task
+  *                           closures serialize the physical RDD chain,
+  *                           which must be cut periodically too; reading a
+  *                           snapshot back would cut it, but would also lose
+  *                           the state's partitioning.)
   * @param disableAqeInLoop   adaptive execution re-plans every tiny superstep
   *                           stage and multiplies fixed per-iteration latency
   *                           ~5x (measured); the loop turns AQE off for its
@@ -96,7 +106,9 @@ final case class LoopResult(
   * persisted and the active count is folded into the same job as a tiny
   * aggregate over the cached rows (round 1 ran persist-then-count —
   * two driver-synchronized jobs per superstep, which dominated superstep
-  * latency at benchmark scale).
+  * latency at benchmark scale). A checkpointed batch is one action too:
+  * the snapshot's parquet write fills the cache, and an [[Observation]] on
+  * that write carries the active count.
   *
   * Shuffle discipline: the driver never repartitions state; each step is
   * expected to produce state hash-partitioned by id (the natural output of
@@ -118,13 +130,16 @@ object SuperstepLoop {
   def run(init: DataFrame, cfg: LoopConfig)
          (step: (DataFrame, Int) => DataFrame): LoopResult =
     withLoopConf(init.sparkSession, cfg) {
-      loop(init.sparkSession, init, 0, Seq.empty, cfg)(step)
+      loop(init, 0, cfg)(step)
     }
 
   /** Resume from the latest durable snapshot under `cfg.checkpointDir`.
     * Falls back to `init` (fresh run) when no snapshot exists. The final
     * state is identical to an uninterrupted run: supersteps are pure
-    * functions of the previous state, and snapshot commits are atomic. */
+    * functions of the previous state, and snapshot commits are atomic.
+    * A parquet scan reports no partitioning, so the first superstep of a
+    * resumed run shuffles the re-read state by id once; from then on the
+    * state stays id-partitioned as in an uninterrupted run. */
   def resume(spark: SparkSession, init: => DataFrame, cfg: LoopConfig)
             (step: (DataFrame, Int) => DataFrame): LoopResult = {
     val dir = cfg.checkpointDir.getOrElse(
@@ -138,7 +153,7 @@ object SuperstepLoop {
         if (active == 0L || iter >= cfg.maxSteps)
           LoopResult(state, iter, active == 0L, Seq.empty)
         else withLoopConf(spark, cfg) {
-          loop(spark, state, iter, Seq.empty, cfg)(step)
+          loop(state, iter, cfg)(step)
         }
     }
   }
@@ -211,23 +226,44 @@ object SuperstepLoop {
     withConf(df.sparkSession, Seq(AqeKey -> "false"))(input.persist())
   }
 
+  private def activeCount: Column = count(when(col(ActiveCol), lit(1))).as("active")
+
   /** Materialize `df` (persist) and return its active count — ONE action:
     * the aggregate populates the cache and folds the count in the same job. */
   private def materialize(df: DataFrame, cfg: LoopConfig): (DataFrame, Long) = {
     val cached = df.persist(cfg.storageLevel)
-    val row: Row = cached.agg(
-      count(when(col(ActiveCol), lit(1))).as("active")).collect()(0)
+    val row: Row = cached.agg(activeCount).collect()(0)
     (cached, row.getLong(0))
   }
 
-  private def loop(spark: SparkSession, init: DataFrame, startIter: Int,
-                   history0: Seq[IterationMetrics], cfg: LoopConfig)
+  /** Materialize `df` by committing it as the next snapshot under `dir`,
+    * and return its active count — also ONE action: the parquet write scans
+    * the persisted plan, so it fills the cache, and the count is observed on
+    * that write. The manifest, renamed into place last, records it. */
+  private def materializeSnapshot(df: DataFrame, dir: String, cfg: LoopConfig,
+                                  iter: Int, t0: Long): (DataFrame, Long) = {
+    val cached = df.persist(cfg.storageLevel)
+    val observed = Observation()
+    lazy val active = observed.get("active").asInstanceOf[Long]
+    SnapshotStore.commit(cached.observe(observed, activeCount), dir,
+      snapshotMeta(cached, iter, active, t0))
+    (cached, active)
+  }
+
+  private def snapshotMeta(state: DataFrame, iter: Int, active: Long,
+                           t0: Long): Map[String, String] = Map(
+    "iteration"   -> iter.toString,
+    "activeCount" -> active.toString,
+    "wallMs"      -> ((System.nanoTime() - t0) / 1000000L).toString,
+    "partitions"  -> state.rdd.getNumPartitions.toString)
+
+  private def loop(init: DataFrame, startIter: Int, cfg: LoopConfig)
                   (step: (DataFrame, Int) => DataFrame): LoopResult = {
     // `cached` is the handle holding storage; `state` is the plan-truncated
     // view handed to the next superstep.
     var (cached, active) = materialize(init, cfg)
     var state   = GraftSqlCompat.truncatePlan(cached)
-    var history = history0
+    var history = Seq.empty[IterationMetrics]
     var iter    = startIter
     var lastCut = startIter
     var converged = active == 0L
@@ -244,41 +280,38 @@ object SuperstepLoop {
         iter += 1
         chained = GraftSqlCompat.truncatePlan(step(chained, iter))
       }
-      val (nextCached, nextActive) = materialize(chained, cfg)
+      val checkpoint = cfg.checkpointDir.filter(_ => iter % cfg.checkpointInterval == 0)
+      val (nextCached, nextActive) = checkpoint match {
+        case Some(dir) => materializeSnapshot(chained, dir, cfg, iter, t0)
+        case None      => materialize(chained, cfg)
+      }
       active = nextActive
       val wall = (System.nanoTime() - t0) / 1000000L
       history :+= IterationMetrics(iter, active, wall)
       converged = active == 0L
       if (Verbose) System.err.println(s"[loop] iter=$iter active=$active wallMs=$wall")
 
+      // a run that converges between checkpoint intervals still leaves its
+      // final state durable (a second job, once per run)
+      if (checkpoint.isEmpty && converged)
+        cfg.checkpointDir.foreach(dir =>
+          SnapshotStore.commit(nextCached, dir, snapshotMeta(nextCached, iter, active, t0)))
+      if (cfg.checkpointKeepLast > 0 && (checkpoint.isDefined || converged))
+        cfg.checkpointDir.foreach(SnapshotStore.expire(_, cfg.checkpointKeepLast))
+
       val prevCached = cached
-      cfg.checkpointDir match {
-        case Some(dir) if iter % cfg.checkpointInterval == 0 || converged =>
-          // Durable snapshot: per-partition parquet + convergence metrics in
-          // the manifest; reading it back also truncates all lineage.
-          val snap = SnapshotStore.commit(nextCached, dir, Map(
-            "iteration"   -> iter.toString,
-            "activeCount" -> active.toString,
-            "wallMs"      -> wall.toString,
-            "partitions"  -> nextCached.rdd.getNumPartitions.toString))
-          if (cfg.checkpointKeepLast > 0)
-            SnapshotStore.expire(dir, cfg.checkpointKeepLast)
-          nextCached.unpersist(false)
-          cached = spark.read.parquet(snap.dataPath).persist(cfg.storageLevel)
-          state  = cached
-        case _ if iter - lastCut >= cfg.truncateInterval &&
-                  !converged && iter < cfg.maxSteps =>
-          // periodic hard cut of the physical RDD chain — only when the loop
-          // will actually run more supersteps (the cut is an eager full copy
-          // of the state; at loop exit it would be pure waste)
-          lastCut = iter
-          val cut = nextCached.localCheckpoint(true)
-          nextCached.unpersist(false)
-          cached = cut
-          state  = cut
-        case _ =>
-          cached = nextCached
-          state  = GraftSqlCompat.truncatePlan(nextCached)
+      if (iter - lastCut >= cfg.truncateInterval && !converged && iter < cfg.maxSteps) {
+        // periodic hard cut of the physical RDD chain — only when the loop
+        // will actually run more supersteps (the cut is an eager full copy
+        // of the state; at loop exit it would be pure waste)
+        lastCut = iter
+        val cut = nextCached.localCheckpoint(true)
+        nextCached.unpersist(false)
+        cached = cut
+        state  = cut
+      } else {
+        cached = nextCached
+        state  = GraftSqlCompat.truncatePlan(nextCached)
       }
       prevCached.unpersist(false)
     }

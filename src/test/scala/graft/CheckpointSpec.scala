@@ -1,10 +1,15 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, GraftTestAccess}
 import org.apache.spark.sql.functions._
 import graft.algo.{PageRank, PageRankConfig, Wcc, WccConfig}
 import graft.io.SnapshotStore
+import graft.pregel.{LoopConfig, SuperstepLoop}
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
 /** Checkpoint/resume: the north rule requires per-iteration durable
   * checkpoints with convergence metrics, and resume producing the identical
@@ -16,6 +21,29 @@ class CheckpointSpec extends AnyFunSuite with SparkTestBase {
     5L -> 1L, 5L -> 4L, 6L -> 1L, 6L -> 4L, 7L -> 1L, 7L -> 4L, 8L -> 1L,
     8L -> 4L, 9L -> 4L, 10L -> 4L)
   lazy val graph = graphOf(11, edges)
+
+  private def tempDir(prefix: String): String = Files.createTempDirectory(prefix).toString
+
+  /** Spark jobs started while `body` runs. */
+  private def jobsIn(body: => Unit): Int = {
+    GraftTestAccess.drainListeners(spark)
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try { body; GraftTestAccess.drainListeners(spark) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get
+  }
+
+  /** Longest dependency chain under `rdd` (shared ancestors counted once). */
+  private def lineageDepth(rdd: RDD[_]): Int = {
+    val memo = scala.collection.mutable.Map.empty[Int, Int]
+    def depth(r: RDD[_]): Int = memo.getOrElseUpdate(r.id,
+      1 + r.dependencies.map(d => depth(d.rdd)).maxOption.getOrElse(0))
+    depth(rdd)
+  }
 
   test("interrupted pagerank resumes to the identical final state") {
     val dir = Files.createTempDirectory("graft-ck-pr").toString
@@ -51,6 +79,55 @@ class CheckpointSpec extends AnyFunSuite with SparkTestBase {
       checkpointInterval = 2))
     // fresh run ignores old snapshots; resumed-from state equals full run
     assert(collectLongMap(r.components, "id", "componentId") == full)
+  }
+
+  test("a checkpointed PageRank superstep is one job") {
+    def jobs(iterations: Int): Int = {
+      val dir = tempDir("graft-ck-jobs")
+      val n = jobsIn(PageRank.run(graph, PageRankConfig(tolerance = 0.0,
+        maxIterations = iterations, checkpointDir = Some(dir))))
+      assert(SnapshotStore.latest(dir).get.meta("iteration").toInt == iterations - 1)
+      n
+    }
+    val (four, eight) = (jobs(4), jobs(8))
+    assert(eight - four == 4, s"4 more checkpointed supersteps ran ${eight - four} more jobs")
+    assert(eight <= 8 + 2, s"a checkpointed 8-iteration PageRank ran $eight jobs")
+  }
+
+  test("checkpointing every iteration keeps lineage bounded and scores unchanged") {
+    val dir = tempDir("graft-ck-depth")
+    val plain = PageRank.run(graph, PageRankConfig(tolerance = 0.0, maxIterations = 20))
+    val ck = PageRank.run(graph, PageRankConfig(tolerance = 0.0, maxIterations = 20,
+      checkpointDir = Some(dir), checkpointInterval = 1))
+    assert(collectMap(ck.scores, "id", "score") == collectMap(plain.scores, "id", "score"))
+    assert(SnapshotStore.snapshots(dir).size == 19)
+    // the loop never chains more than truncateInterval (8) supersteps
+    // between lineage cuts; a 9-iteration run is the longest uncut chain
+    val uncut = PageRank.run(graph, PageRankConfig(tolerance = 0.0, maxIterations = 9))
+    val ckDepth = lineageDepth(ck.scores.queryExecution.toRdd)
+    val uncutDepth = lineageDepth(uncut.scores.queryExecution.toRdd)
+    assert(ckDepth < uncutDepth,
+      s"lineage depth $ckDepth after 19 checkpointed supersteps, $uncutDepth after 8 uncut ones")
+  }
+
+  test("a run converging between checkpoint intervals commits its final state") {
+    val dir = tempDir("graft-ck-conv")
+    val init = spark.range(6).select(col("id"), lit(0L).as("v"),
+      lit(true).as(SuperstepLoop.ActiveCol))
+    // odd ids halt at iteration 3, even ids at 4: a checkpoint at 3 with
+    // 3 active rows, convergence at 4, between intervals
+    val cfg = LoopConfig(maxSteps = 10, checkpointDir = Some(dir), checkpointInterval = 3)
+    def step(state: DataFrame, iter: Int): DataFrame = state.select(col("id"),
+      (col("v") + 1).as("v"), (col("v") + 1 + col("id") % 2 < 4).as(SuperstepLoop.ActiveCol))
+    val run = SuperstepLoop.run(init, cfg)(step)
+    assert(run.didConverge && run.ranIterations == 4)
+    val snaps = SnapshotStore.snapshots(dir)
+    assert(snaps.map(s => s.meta("iteration") -> s.meta("activeCount")) ==
+      Seq("3" -> "3", "4" -> "0"))
+    val resumed = SuperstepLoop.resume(spark, init, cfg)(step)
+    assert(resumed.didConverge && resumed.ranIterations == 4)
+    def rows(df: DataFrame) = df.orderBy("id").collect().toSeq
+    assert(rows(resumed.state) == rows(run.state))
   }
 
   test("snapshot store: atomic versioned commits and latest-read") {

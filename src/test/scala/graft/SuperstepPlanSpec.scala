@@ -10,13 +10,16 @@ import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.algo.{LabelPropagation, LpConfig, PageRank, PageRankConfig, Schedule, Wcc}
-import graft.pregel.SuperstepLoop
+import graft.io.SnapshotStore
+import graft.pregel.{LoopConfig, SuperstepLoop}
 
 /** Physical shape of superstep 1 of PageRank, WCC and LP, built the way
   * `run` builds it: the edge inputs and the initial state come from the
   * algorithms' own builders, set up with adaptive execution ON (a default
   * session) and never warmed by an action, and the state is persisted and
   * plan-truncated under the loop's conf, as the loop hands it to a step.
+  * A checkpointed run is checked at superstep 2, over the state the loop
+  * hands on right after committing a snapshot.
   * Each superstep must hash its joins (no sort-merge join re-sorting the
   * edge table every superstep) and shuffle exactly once: the persisted edge
   * table and the state must both report their partitioning from the first
@@ -67,18 +70,44 @@ class SuperstepPlanSpec extends AnyFunSuite with SparkTestBase {
       s"$name superstep has ${exchanges.size} exchanges, expected 1:\n$plan")
   }
 
+  private def pageRankEdges: DataFrame = {
+    val deg = edges.groupBy("src").agg(count(lit(1)).cast("double").as("deg"))
+    val norm = edges.join(deg, "src")
+      .select(col("src"), col("dst"), (lit(1.0) / col("deg")).as("norm"))
+    PageRank.augmentedEdges(norm, vertices, parts)
+  }
+
   test("PageRank superstep: hash join on the state, one exchange") {
-    val (augEdges, (cached, state)) = adaptive {
-      val deg = edges.groupBy("src").agg(count(lit(1)).cast("double").as("deg"))
-      val norm = edges.join(deg, "src")
-        .select(col("src"), col("dst"), (lit(1.0) / col("deg")).as("norm"))
-      (PageRank.augmentedEdges(norm, vertices, parts),
-       loopState(PageRank.initState(vertices, PageRankConfig(), parts)))
-    }
+    val augEdges = adaptive(pageRankEdges)
+    // the carrier rows of the src-partitioned edge table already are the
+    // id-partitioned vertex set: building the state shuffles nothing
+    val initPlan = plannedStep(PageRank.initState(augEdges, PageRankConfig()))
+    assert(initPlan.collect { case e: ShuffleExchangeExec => e }.isEmpty,
+      s"PageRank initial state shuffles:\n$initPlan")
+    val (cached, state) = adaptive(loopState(PageRank.initState(augEdges, PageRankConfig())))
     assertIdPartitioned("PageRank", state)
     assertShape("PageRank", plannedStep(
       PageRank.step(augEdges, None, PageRankConfig(), 1.0)(state, 1)))
     augEdges.unpersist(false); cached.unpersist(false)
+  }
+
+  test("PageRank superstep after a checkpoint commit: one exchange") {
+    // the loop itself hands superstep 2 the state it committed at
+    // iteration 1; that state must still be id-partitioned
+    val dir = java.nio.file.Files.createTempDirectory("graft-plan-ck").toString
+    val augEdges = adaptive(pageRankEdges)
+    val cfg = PageRankConfig()
+    var afterCommit: Option[SparkPlan] = None
+    SuperstepLoop.run(PageRank.initState(augEdges, cfg),
+      LoopConfig(maxSteps = 2, checkpointDir = Some(dir), shuffleWidth = Some(parts))) {
+      (state, iter) =>
+        val next = PageRank.step(augEdges, None, cfg, 1.0)(state, iter)
+        if (iter == 2) afterCommit = Some(next.queryExecution.executedPlan)
+        next
+    }
+    assert(SnapshotStore.snapshots(dir).map(_.meta("iteration")) == Seq("1", "2"))
+    assertShape("checkpointed PageRank", afterCommit.getOrElse(fail("superstep 2 never ran")))
+    augEdges.unpersist(false)
   }
 
   test("WCC superstep: hash joins on the frontier and the minimum, one exchange") {
