@@ -31,17 +31,12 @@ object SparkEntry {
       .limit(20)
   }
 
-  /** Scope the stateful-stream shuffle/state-store partition count to the
-    * data (the state store allocates one instance per partition per
-    * micro-batch — 32 is over-provisioned for the test corpora; a real
-    * deployment sizes this to keyed-state volume the same way). Restores
-    * the previous setting afterwards. */
-  private def withStatePartitions[A](s: SparkSession, n: Int)(body: => A): A = {
-    val key  = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
+  /** Stateful-stream shuffle/state-store partition count, scoped to the
+    * data with GraphOps.withShuffleWidth (the state store allocates one
+    * instance per partition per micro-batch — 32 is over-provisioned for the
+    * test corpora; a real deployment sizes this to keyed-state volume the
+    * same way). */
+  private val StreamStateParts = 8
 
   private def table(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
@@ -791,7 +786,7 @@ object SparkEntry {
       Events.sessionize(table(s, dir, "events")).orderBy("user_id", "session_id")),
     "q_events_window" -> ((s, dir) =>
       Events.windowedCounts(table(s, dir, "events")).orderBy("window_start", "event_type")),
-    "q_events_window_stream" -> ((s, dir) => withStatePartitions(s, 8) {
+    "q_events_window_stream" -> ((s, dir) => GraphOps.withShuffleWidth(s, StreamStateParts) {
       // watermarked tumbling-window counts as a structured stream over the
       // SAME events table: fed time-ordered in two micro-batches plus a
       // far-future sentinel that drives the watermark past every real
@@ -828,7 +823,7 @@ object SparkEntry {
           col("event_type"), col("n"), col("total_value"))
         .orderBy("window_start", "event_type")
     }),
-    "q_sessionize_stream" -> ((s, dir) => withStatePartitions(s, 8) {
+    "q_sessionize_stream" -> ((s, dir) => GraphOps.withShuffleWidth(s, StreamStateParts) {
       // the Structured Streaming sessionizer (keyed state + event-time
       // timeout) over the SAME events table, fed through a MemoryStream and
       // closed out by a far-future sentinel user: once every real session's
@@ -954,7 +949,7 @@ object SparkEntry {
       val spark = s; import spark.implicits._
       Seq(missed).toDF("missed_true_pairs")
     }),
-    "q_dedup_stream" -> ((s, dir) => withStatePartitions(s, 8) {
+    "q_dedup_stream" -> ((s, dir) => GraphOps.withShuffleWidth(s, StreamStateParts) {
       // streaming exact dedup over the documents table fed in two
       // micro-batches (cross-batch duplicate state exercised): exactly one
       // representative per normalized-text fingerprint must survive, so the
@@ -1003,7 +998,7 @@ object SparkEntry {
           e.filter(col("vec_id") < 20), e.filter(col("vec_id") < 200), k = 3)
         .orderBy("query_id", "rank")
     }),
-    "q_minhash_stream" -> ((s, dir) => withStatePartitions(s, 8) {
+    "q_minhash_stream" -> ((s, dir) => GraphOps.withShuffleWidth(s, StreamStateParts) {
       // streaming MinHash-LSH near-dup detection over the documents table
       // fed in two micro-batches (cross-batch bucket state exercised), then
       // the batch exact-Jaccard verify over the streamed candidate set —

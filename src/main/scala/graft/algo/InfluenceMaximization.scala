@@ -63,21 +63,24 @@ object InfluenceMaximization {
       .repartition(parts, col("id"))
     // Monotone reach expansion is fixpoint-stable (empty frontier => state
     // reproduces itself), so supersteps fuse; maxDepth stays an exact cap.
-    val reached = SuperstepLoop.run(init,
-        LoopConfig(maxDepth, fusedSteps = 4, shuffleWidth = Some(parts))) { (state, _) =>
-      val msgs = state.filter(col(SuperstepLoop.ActiveCol))
-        .select(col("sample"), col("id").as("src"))
-        .join(rev, "src")
-        .filter(pmod(xxhash64(least(col("src"), col("dst")),
-          greatest(col("src"), col("dst")), col("sample"), lit(seed)),
-          lit(1000000000L)) < lit(pCut))
-        .select(col("sample"), col("dst").as("id")).distinct()
-        .withColumn("cand", lit(true))
-      val full = state.select("sample", "id").withColumn("seen", lit(true))
-        .join(msgs, Seq("sample", "id"), "full")
-      full.select(col("sample"), col("id"),
-        (coalesce(col("cand"), lit(false)) && col("seen").isNull)
-          .as(SuperstepLoop.ActiveCol))
+    // Not SuperstepLoop.relax: the state is keyed by (sample, id) and grows
+    // to samples x reached rows, so the frontier is not a V-sized build side.
+    val reached = GraphOps.withShuffleWidth(spark, parts) {
+      SuperstepLoop.run(init, LoopConfig(maxDepth, fusedSteps = 4)) { (state, _) =>
+        val msgs = state.filter(col(SuperstepLoop.ActiveCol))
+          .select(col("sample"), col("id").as("src"))
+          .join(rev, "src")
+          .filter(pmod(xxhash64(least(col("src"), col("dst")),
+            greatest(col("src"), col("dst")), col("sample"), lit(seed)),
+            lit(1000000000L)) < lit(pCut))
+          .select(col("sample"), col("dst").as("id")).distinct()
+          .withColumn("cand", lit(true))
+        val full = state.select("sample", "id").withColumn("seen", lit(true))
+          .join(msgs, Seq("sample", "id"), "full")
+        full.select(col("sample"), col("id"),
+          (coalesce(col("cand"), lit(false)) && col("seen").isNull)
+            .as(SuperstepLoop.ActiveCol))
+      }
     }.state.select("sample", "id").persist()
     reached.count()
     rev.unpersist(false)

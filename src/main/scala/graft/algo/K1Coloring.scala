@@ -33,16 +33,11 @@ object K1Coloring {
     // shuffle stages whose task-launch cost — not data — floors the round
     // at small graph sizes. ~50k edges per partition; large graphs keep the
     // session's width.
-    val sessionParts = spark.sessionState.conf.numShufflePartitions
     val e0 = graph.edges.count()
     if (cfg.localTailThreshold >= 0L && e0 <= cfg.localTailThreshold)
       return runLocal(graph, cfg)
-    val parts = cfg.numPartitions.getOrElse(
-      math.max(2, math.min(sessionParts, (e0 / 50000L).toInt + 1)))
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    try runWithParts(graph, cfg, parts)
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    val parts = cfg.numPartitions.getOrElse(GraphOps.adaptiveParts(spark, e0, 50000L))
+    GraphOps.withShuffleWidth(spark, parts)(runWithParts(graph, cfg, parts))
   }
 
   /** Driver-local tail: the exact same synchronous rounds — monochromatic

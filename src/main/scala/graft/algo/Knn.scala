@@ -3,6 +3,7 @@ package graft.algo
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.core.GraphOps
 import graft.ops.Ann
 
 /** K-nearest-neighbours over a node embedding column via NN-descent.
@@ -78,7 +79,6 @@ object Knn {
   def run(vectors: DataFrame, cfg: KnnConfig = KnnConfig(),
           idCol: String = "vec_id", vecCol: String = "embedding"): KnnResult = {
     val spark = vectors.sparkSession
-    val sessionParts = spark.sessionState.conf.numShufflePartitions
     val n0 = vectors.select(col(idCol)).count()
     if (cfg.localTailThreshold >= 0L && n0 <= cfg.localTailThreshold)
       return runLocal(vectors, cfg, idCol, vecCol)
@@ -89,11 +89,8 @@ object Knn {
     // tax of a wide shuffle (each NN-descent round runs ~6 stages, so width
     // overhead is paid many times per run); large corpora use the session's
     // width
-    val parts = math.max(2, math.min(sessionParts, (n0 / 400L).toInt + 1))
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    try runWithParts(vectors, cfg, idCol, vecCol, parts)
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    val parts = GraphOps.adaptiveParts(spark, n0, 400L)
+    GraphOps.withShuffleWidth(spark, parts)(runWithParts(vectors, cfg, idCol, vecCol, parts))
   }
 
   /** Driver-local NN-descent replicating the distributed path's decisions

@@ -156,9 +156,10 @@ object LabelPropagation {
     val edges = voteEdges(weightedEdges(graph, cfg), parts)
     val init = initState(graph.vertices, cfg, parts)
 
-    val loopCfg = LoopConfig(cfg.maxIterations, cfg.checkpointDir, cfg.checkpointInterval,
-      shuffleWidth = Some(parts))
-    val result = SuperstepLoop.run(init, loopCfg)(syncStep(edges, cfg.schedule, parts))
+    val loopCfg = LoopConfig(cfg.maxIterations, cfg.checkpointDir, cfg.checkpointInterval)
+    val result = GraphOps.withShuffleWidth(spark, parts) {
+      SuperstepLoop.run(init, loopCfg)(syncStep(edges, cfg.schedule, parts))
+    }
     edges.unpersist(false)
     LpResult(result.state.select("id", "label"), result.ranIterations, result.didConverge)
   }

@@ -61,21 +61,16 @@ object Louvain {
     // narrow shuffle stages, so at small edge counts task-launch cost —
     // not data — dominates. ~50k edges per partition; big graphs keep the
     // session width. (AQE would do this coalescing, but it's off in loops.)
-    val sessionParts = spark.sessionState.conf.numShufflePartitions
     val e0 = graph.edges.count()
     if (cfg.localTailThreshold >= 0L && e0 <= cfg.localTailThreshold)
       return runFullyLocal(graph, cfg)
-    val parts = cfg.numPartitions.getOrElse(
-      math.max(2, math.min(sessionParts, (e0 / 50000L).toInt + 1)))
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    val parts = cfg.numPartitions.getOrElse(GraphOps.adaptiveParts(spark, e0, 50000L))
     // NOTE: unlike SuperstepLoop, AQE stays ON here — measured 2.8x FASTER
     // for the local-move rounds (413s vs 148s on the 20k-page probe): the
     // round's community-total and candidate joins rely on AQE's runtime
     // broadcast conversion, which the hint-only path can't replicate
     // because the aggregated sides have no size estimates.
-    try runWithParts(graph, cfg, parts)
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    GraphOps.withShuffleWidth(spark, parts)(runWithParts(graph, cfg, parts))
   }
 
   private def runWithParts(graph: PropertyGraph, cfg: LouvainConfig,

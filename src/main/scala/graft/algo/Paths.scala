@@ -1,6 +1,6 @@
 package graft.algo
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{GraphOps, Orientation, PropertyGraph}
 import graft.pregel.{LoopConfig, SuperstepLoop}
@@ -28,32 +28,12 @@ object Paths {
     // per-level joins stay co-partitioned
     val parts = GraphOps.adaptiveParts(spark, graph.edges.count())
     GraphOps.withShuffleWidth(spark, parts) {
-    val edges = graph.orientedEdges(orientation).select("src", "dst")
-      .repartition(parts, col("src")).persist()
-
-    val init = graph.vertices.select("id")
-      .repartition(parts, col("id"))
-      .select(col("id"),
-        when(col("id") === source, lit(0L)).otherwise(lit(Long.MaxValue)).as("dist"),
-        (col("id") === source).as(SuperstepLoop.ActiveCol))
-
-    // Min-relaxation is fixpoint-stable (an empty frontier reproduces the
-    // state) and the fused loop still caps supersteps at maxDepth exactly,
-    // so depth semantics are unchanged; fusing removes the per-level driver
-    // round-trip that dominates BFS latency on small-diameter web graphs.
-    val result = SuperstepLoop.run(init,
-        LoopConfig(maxDepth, fusedSteps = 4)) { (state, _) =>
-      val candidates = state.filter(col(SuperstepLoop.ActiveCol))
-        .select(col("id").as("src"), col("dist"))
-        .join(edges, "src")
-        .select(col("dst").as("id"), (col("dist") + 1L).as("cand"))
-        .groupBy("id").agg(min("cand").as("cand"))
-      state.select("id", "dist").join(candidates, Seq("id"), "left")
-        .select(col("id"), least(col("dist"), coalesce(col("cand"), col("dist"))).as("dist"),
-          (coalesce(col("cand"), lit(Long.MaxValue)) < col("dist")).as(SuperstepLoop.ActiveCol))
-    }
+    val edges = SuperstepLoop.persistInput(
+      graph.orientedEdges(orientation).select("src", "dst"), parts, "src")
+    val levels = relaxFrom(graph.vertices, edges, source, 0L, Long.MaxValue,
+      col("dist") + 1L, maxDepth, parts)
     edges.unpersist(false)
-    result.state.filter(col("dist") =!= Long.MaxValue).select("id", "dist")
+    levels.filter(col("dist") =!= Long.MaxValue).select("id", "dist")
     }
   }
 
@@ -68,32 +48,55 @@ object Paths {
     val spark = graph.edges.sparkSession
     val parts = GraphOps.adaptiveParts(spark, graph.edges.count())
     GraphOps.withShuffleWidth(spark, parts) {
-    val edges = GraphOps.withWeight(graph.orientedEdges(orientation))
-      .select("src", "dst", "weight")
-      .repartition(parts, col("src")).persist()
-
-    val inf = Double.PositiveInfinity
-    val init = graph.vertices.select("id")
-      .repartition(parts, col("id"))
-      .select(col("id"),
-        when(col("id") === source, lit(0.0)).otherwise(lit(inf)).as("dist"),
-        (col("id") === source).as(SuperstepLoop.ActiveCol))
-
-    val result = SuperstepLoop.run(init,
-        LoopConfig(maxRounds, fusedSteps = 4)) { (state, _) =>
-      val candidates = state.filter(col(SuperstepLoop.ActiveCol))
-        .select(col("id").as("src"), col("dist"))
-        .join(edges, "src")
-        .select(col("dst").as("id"), (col("dist") + col("weight")).as("cand"))
-        .groupBy("id").agg(min("cand").as("cand"))
-      state.select("id", "dist").join(candidates, Seq("id"), "left")
-        .select(col("id"), least(col("dist"), coalesce(col("cand"), col("dist"))).as("dist"),
-          (coalesce(col("cand"), lit(inf)) < col("dist")).as(SuperstepLoop.ActiveCol))
-    }
+    val edges = weightedEdges(graph, orientation, parts)
+    val dists = distances(graph.vertices, edges, source, maxRounds, parts)
     edges.unpersist(false)
-    result.state.filter(!col("dist").isNaN && col("dist") =!= inf).select("id", "dist")
+    dists
     }
   }
+
+  /** (src, dst, weight) of `graph` in `orientation`, persisted by src for
+    * [[distances]]. */
+  private[graft] def weightedEdges(graph: PropertyGraph, orientation: Orientation,
+                                   parts: Int): DataFrame =
+    SuperstepLoop.persistInput(
+      GraphOps.withWeight(graph.orientedEdges(orientation)).select("src", "dst", "weight"),
+      parts, "src")
+
+  /** (id, dist) of every vertex reachable from `source` over the
+    * [[weightedEdges]] `edges`; the rows are a read of the loop's cached
+    * final state. Call inside a `parts`-wide shuffle scope. */
+  private[graft] def distances(vertices: DataFrame, edges: DataFrame, source: Long,
+                               maxRounds: Int, parts: Int): DataFrame = {
+    val inf = Double.PositiveInfinity
+    relaxFrom(vertices, edges, source, 0.0, inf, col("dist") + col("weight"), maxRounds, parts)
+      .filter(!col("dist").isNaN && col("dist") =!= inf)
+      .select("id", "dist")
+  }
+
+  /** Initial single-source state (id, dist, extra…, _active): `zero` at
+    * `source`, `inf` elsewhere, only the source active; partitioned by id
+    * after the projection. */
+  private[graft] def sourceState(vertices: DataFrame, source: Long, zero: Any, inf: Any,
+                                 parts: Int, extra: Column*): DataFrame =
+    vertices
+      .select(Seq(col("id"), when(col("id") === source, lit(zero)).otherwise(lit(inf)).as("dist")) ++
+        extra :+ (col("id") === source).as(SuperstepLoop.ActiveCol): _*)
+      .repartition(parts, col("id"))
+
+  /** Frontier min-relaxation of `dist` from `source` to fixpoint (at most
+    * `maxRounds` supersteps); returns the loop's final state. Min-relaxation
+    * is fixpoint-stable (an empty frontier reproduces the state) and the
+    * fused loop still caps supersteps at `maxRounds` exactly; fusing removes
+    * the per-round driver round-trip that dominates latency on
+    * small-diameter web graphs. */
+  private def relaxFrom(vertices: DataFrame, edges: DataFrame, source: Long,
+                        zero: Any, inf: Any, cand: Column,
+                        maxRounds: Int, parts: Int): DataFrame =
+    SuperstepLoop.run(sourceState(vertices, source, zero, inf, parts),
+        LoopConfig(maxRounds, fusedSteps = 4)) { (state, _) =>
+      SuperstepLoop.relax(state, edges, "dist", cand, min = true)
+    }.state
 
   /** DFS preorder from `source` with deterministic neighbor order
     * (ascending id) and optional depth / target exit conditions — the

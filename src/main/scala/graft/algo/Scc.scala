@@ -2,7 +2,7 @@ package graft.algo
 
 import org.apache.spark.sql.{DataFrame, GraftSqlCompat}
 import org.apache.spark.sql.functions._
-import graft.core.PropertyGraph
+import graft.core.{GraphOps, PropertyGraph}
 import graft.pregel.{LoopConfig, SuperstepLoop}
 
 /** Strongly connected components.
@@ -51,7 +51,9 @@ object Scc {
     // driver planning per rebuild count by outer round 2 on a 400-node graph).
     var remVHandle = graph.vertices.select("id").persist()
     // repartition BEFORE distinct: hash(src) clusters equal pairs, so the
-    // dedup reuses that exchange
+    // dedup reuses that exchange. (Not persistInput: round 1 runs at the
+    // remaining-node width, which only matches `parts` at scale, and the
+    // non-adaptive cached plan measured 3% more shuffle over a whole run.)
     var remEHandle = graph.edges.select("src", "dst")
       .filter(col("src") =!= col("dst"))
       .repartition(parts, col("src")).distinct().persist()
@@ -78,24 +80,9 @@ object Scc {
     // every round that matters, and on the tail it collapses superstep
     // latency instead of fanning empty tasks. Scoped per round: SuperstepLoop
     // fixpoints plan their shuffles inside the round body.
-    //
-    // Floor of 2, never 1: a single-partition output satisfies EVERY
-    // distribution requirement, so Catalyst drops all exchanges and plans
-    // the whole fused superstep chain as one task of nested sort-merge
-    // joins — which re-enters a SortExec's UnsafeExternalRowSorter after
-    // it was freed (NPE in UnsafeExternalSorter.insertRecord, reproduced
-    // on the sf0.001 tail). Two partitions keep the exchange boundaries.
-    def partsFor(n: Long): Int =
-      math.max(2, math.min(parts.toLong, n / 25000L + 1L)).toInt
-    def withShuffleParts[T](n: Int)(body: => T): T = {
-      val key  = "spark.sql.shuffle.partitions"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, n.toString)
-      try body finally prev.foreach(spark.conf.set(key, _))
-    }
     while (remaining > 0 && outer < maxOuterRounds) {
       outer += 1
-      val p = partsFor(remaining)
+      val p = GraphOps.adaptiveParts(spark, remaining)
       val tOuter = System.nanoTime()
       if (remaining <= localSolveThreshold) {
         // Tail handoff: the remainder fits on the driver — finish with one
@@ -115,7 +102,7 @@ object Scc {
         if (debug)
           println(f"SCC-ROUND outer=$outer remaining=0 (local tarjan on " +
             f"${vs.length} nodes) secs=${(System.nanoTime() - tOuter) / 1e9}%.2f")
-      } else withShuffleParts(p) {
+      } else GraphOps.withShuffleWidth(spark, p) {
       // 0. trim: nodes with no in- or no out-edge in the remaining subgraph
       // are singleton SCCs — peel them in bulk (the standard trim step; it
       // collapses DAG-like regions without paying a coloring fixpoint).
@@ -156,25 +143,19 @@ object Scc {
         // reproduces itself), so fuse 4 supersteps per driver action.
         val c = SuperstepLoop.run(colorInit,
             LoopConfig(maxInnerRounds, fusedSteps = 4)) { (state, _) =>
-          val msgs = state.filter(col(SuperstepLoop.ActiveCol))
-            .select(col("id").as("src"), col("color"))
-            .join(remE, "src")
-            .groupBy(col("dst").as("id")).agg(max("color").as("cand"))
-          state.select("id", "color").join(msgs, Seq("id"), "left")
-            .select(col("id"), greatest(col("color"), coalesce(col("cand"), col("color"))).as("color"),
-              (coalesce(col("cand"), lit(Long.MinValue)) > col("color")).as(SuperstepLoop.ActiveCol))
+          SuperstepLoop.relax(state, remE, "color", col("color"), min = false)
         }.state.select("id", "color").persist()
         c.count()
         c
       }
 
       // 2. backward reach from each pivot within its color class
-      val colored = remE
+      val sameColor = remE
         .join(colors.select(col("id").as("src"), col("color").as("c1")), "src")
         .join(colors.select(col("id").as("dst"), col("color").as("c2")), "dst")
         .filter(col("c1") === col("c2"))
         .select(col("src"), col("dst"), col("c1").as("color"))
-        .repartition(p, col("dst")).persist()
+      val colored = SuperstepLoop.persistInput(sameColor, p, "dst")
       val reach = phase("reach") {
         val reachInit = colors
           .select(col("id"), col("color"), (col("id") === col("color")).as("reached"))
@@ -183,15 +164,8 @@ object Scc {
         val r = SuperstepLoop.run(reachInit,
             LoopConfig(maxInnerRounds, fusedSteps = 4)) { (state, _) =>
           // reached flows BACKWARD: v reached and edge u->v (same color) => u
-          val msgs = state.filter(col(SuperstepLoop.ActiveCol))
-            .select(col("id").as("dst"))
-            .join(colored, "dst")
-            .select(col("src").as("id")).distinct()
-            .withColumn("cand", lit(true))
-          state.select("id", "color", "reached").join(msgs, Seq("id"), "left")
-            .select(col("id"), col("color"),
-              (col("reached") || coalesce(col("cand"), lit(false))).as("reached"),
-              (coalesce(col("cand"), lit(false)) && !col("reached")).as(SuperstepLoop.ActiveCol))
+          SuperstepLoop.relax(state, colored, "reached", lit(true), min = false,
+            from = "dst", to = "src")
         }.state.persist()
         r.count()
         r
@@ -205,13 +179,12 @@ object Scc {
       phase("peel")(piece.count())
       pieces ::= piece
 
-      val newV = remV.join(piece.select("id"), Seq("id"), "left_anti")
-        .repartition(p, col("id")).persist()
-      val newE = remE
+      val newV = SuperstepLoop.persistInput(
+        remV.join(piece.select("id"), Seq("id"), "left_anti"), p, "id")
+      val newE = SuperstepLoop.persistInput(remE
         .join(newV.select(col("id").as("src")), Seq("src"), "left_semi")
         .join(newV.select(col("id").as("dst")), Seq("dst"), "left_semi")
-        .select("src", "dst")
-        .repartition(p, col("src")).persist()
+        .select("src", "dst"), p, "src")
       remaining = phase("rebuild") { val r = newV.count(); newE.count(); r }
       remVHandle.unpersist(false); remEHandle.unpersist(false)
       colors.unpersist(false); colored.unpersist(false); reach.unpersist(false)

@@ -39,44 +39,12 @@ object ShortestPaths {
       return dijkstraLocal(graph, source, orientation, maxRounds, trackPaths)
     val parts = GraphOps.adaptiveParts(spark, edgeCount)
     GraphOps.withShuffleWidth(spark, parts) {
-    val edges = GraphOps.withWeight(graph.orientedEdges(orientation))
-      .select("src", "dst", "weight")
-      .repartition(parts, col("src")).persist()
+    val edges = Paths.weightedEdges(graph, orientation, parts)
+    // Paths.sssp's distance phase; its rows are a read of the loop's cached
+    // final state, so the three references below cost no extra action.
+    val dists = Paths.distances(graph.vertices, edges, source, maxRounds, parts)
 
-    val inf = Double.PositiveInfinity
-    val init = graph.vertices.select("id")
-      .repartition(parts, col("id"))
-      .select(col("id"),
-        when(col("id") === source, lit(0.0)).otherwise(lit(inf)).as("dist"),
-        (col("id") === source).as(SuperstepLoop.ActiveCol))
-
-    // Fixpoint-stable min-relaxation: fuse supersteps (one multi-stage job
-    // per batch) to drop the per-round driver sync; maxRounds is still an
-    // exact cap inside the fused loop.
-    val relaxed = SuperstepLoop.run(init,
-        LoopConfig(maxRounds, fusedSteps = 4)) { (state, _) =>
-      val candidates = state.filter(col(SuperstepLoop.ActiveCol))
-        .select(col("id").as("src"), col("dist"))
-        .join(edges, "src")
-        .select(col("dst").as("id"), (col("dist") + col("weight")).as("cand"))
-        .groupBy("id").agg(min("cand").as("cand"))
-      state.select("id", "dist").join(candidates, Seq("id"), "left")
-        .select(col("id"), least(col("dist"), coalesce(col("cand"), col("dist"))).as("dist"),
-          (coalesce(col("cand"), lit(inf)) < col("dist")).as(SuperstepLoop.ActiveCol))
-    }
-    // The loop's final state is already cached; the reachable-set filter is
-    // a cache read, so the three references below cost no extra action.
-    val dists = relaxed.state
-      .filter(!col("dist").isNaN && col("dist") =!= inf)
-      .select("id", "dist")
-
-    // Canonical predecessors: min in-neighbor achieving the final distance.
-    val preds = dists.select(col("id").as("src"), col("dist").as("du"))
-      .join(edges, "src")
-      .join(dists.select(col("id").as("dst"), col("dist").as("dv")), "dst")
-      .filter(col("du") + col("weight") === col("dv"))
-      .groupBy(col("dst").as("id")).agg(min(col("src")).as("pred"))
-    val withPred = dists.join(preds, Seq("id"), "left")
+    val withPred = dists.join(canonicalPreds(dists, edges), Seq("id"), "left")
       .select(col("id"), col("dist"),
         when(col("id") === source, lit(null).cast("long")).otherwise(col("pred")).as("pred"))
       .persist()
@@ -92,6 +60,15 @@ object ShortestPaths {
     }
     }
   }
+
+  /** Canonical predecessors over final distances `dists` (id, dist):
+    * pred(v) = min{ u : dist(u) + w(u,v) = dist(v) }, as (id, pred). */
+  private def canonicalPreds(dists: DataFrame, edges: DataFrame): DataFrame =
+    dists.select(col("id").as("src"), col("dist").as("du"))
+      .join(edges, "src")
+      .join(dists.select(col("id").as("dst"), col("dist").as("dv")), "dst")
+      .filter(col("du") + col("weight") === col("dv"))
+      .groupBy(col("dst").as("id")).agg(min(col("src")).as("pred"))
 
   /** Iterative predecessor-chain reconstruction: walk every start row's
     * chain through `predTable` (id, pred), prepending ancestors until each
@@ -323,48 +300,31 @@ object ShortestPaths {
         radius, orientation, maxRounds)
     val parts = GraphOps.adaptiveParts(spark, edgeCount)
     GraphOps.withShuffleWidth(spark, parts) {
-    val edges = GraphOps.withWeight(graph.orientedEdges(orientation))
-      .select("src", "dst", "weight")
-      .repartition(parts, col("src")).persist()
+    val edges = Paths.weightedEdges(graph, orientation, parts)
     val inf = Double.PositiveInfinity
-    val init = graph.vertices
-      .select(col("id"),
-        haversine(col(latCol).cast("double"), col(lonCol).cast("double"),
-          tLat, tLon, radius).as("h"))
-      .repartition(parts, col("id"))
-      .select(col("id"), when(col("id") === source, lit(0.0)).otherwise(lit(inf)).as("dist"),
-        col("h"), (col("id") === source).as(SuperstepLoop.ActiveCol))
+    val init = Paths.sourceState(graph.vertices, source, 0.0, inf, parts,
+      haversine(col(latCol).cast("double"), col(lonCol).cast("double"),
+        tLat, tLon, radius).as("h"))
 
     // Fixpoint-stable min-relaxation: fuse supersteps (one multi-stage job
     // per batch) to drop the per-round driver sync; maxRounds is still an
-    // exact cap inside the fused loop.
+    // exact cap inside the fused loop. The target's distance before the
+    // superstep bounds which improved vertices stay active.
     val relaxed = SuperstepLoop.run(init,
         LoopConfig(maxRounds, fusedSteps = 4)) { (state, _) =>
       val bound = state.filter(col("id") === target)
         .agg(min(col("dist")).as("bound"))
-      val candidates = state.filter(col(SuperstepLoop.ActiveCol))
-        .select(col("id").as("src"), col("dist"))
-        .join(edges, "src")
-        .select(col("dst").as("id"), (col("dist") + col("weight")).as("cand"))
-        .groupBy("id").agg(min("cand").as("cand"))
-      state.select("id", "dist", "h").join(candidates, Seq("id"), "left")
+      SuperstepLoop.relax(state, edges, "dist", col("dist") + col("weight"), min = true)
         .crossJoin(broadcast(bound))
-        .select(col("id"),
-          least(col("dist"), coalesce(col("cand"), col("dist"))).as("dist"),
-          col("h"),
-          (coalesce(col("cand"), lit(inf)) < col("dist") &&
-            least(col("dist"), col("cand")) + col("h") <= coalesce(col("bound"), lit(inf)))
+        .select(col("id"), col("dist"), col("h"),
+          (col(SuperstepLoop.ActiveCol) &&
+            col("dist") + col("h") <= coalesce(col("bound"), lit(inf)))
             .as(SuperstepLoop.ActiveCol))
     }
     val settled = relaxed.state.filter(col("dist") =!= inf).select("id", "dist").persist()
     settled.count()
     // predecessor forest over settled nodes, then walk the target's chain
-    val preds = settled.select(col("id").as("src"), col("dist").as("du"))
-      .join(edges, "src")
-      .join(settled.select(col("id").as("dst"), col("dist").as("dv")), "dst")
-      .filter(col("du") + col("weight") === col("dv"))
-      .groupBy(col("dst").as("id")).agg(min(col("src")).as("pred"))
-      .persist()
+    val preds = canonicalPreds(settled, edges).persist()
     preds.count()
     edges.unpersist(false)
     val costOpt = settled.filter(col("id") === target).collect()
@@ -691,7 +651,10 @@ object ShortestPaths {
 
     // Fixpoint-stable min-relaxation: fuse supersteps (one multi-stage job
     // per batch) to drop the per-round driver sync; maxRounds is still an
-    // exact cap inside the fused loop.
+    // exact cap inside the fused loop. The update rule is
+    // SuperstepLoop.relax's, but keyed by (s, id): the state, and so the
+    // frontier a hash join would build on, is sources x V rows, not V-sized,
+    // so this step keeps its own (sort-merge) joins.
     val relaxed = SuperstepLoop.run(init,
         LoopConfig(maxRounds, fusedSteps = 4)) { (state, _) =>
       val candidates = state.filter(col(SuperstepLoop.ActiveCol))

@@ -48,24 +48,26 @@ object Sllpa {
     // help here: SLPA's cost is its per-round shuffles (speak + two listen
     // aggregations), not driver actions, and the 5-deep fused plan pays
     // ~2x first-run codegen. One action per round stays.
-    val loop = SuperstepLoop.run(init, LoopConfig(maxIterations, shuffleWidth = Some(parts))) { (state, iter) =>
-      // speaker: uniform index into memory = frequency-proportional draw
-      val spoken = state
-        .select(col("id").as("src"),
-          element_at(col("memory"),
-            (pmod(xxhash64(col("id"), lit(iter), lit(seed)),
-                  size(col("memory"))) + 1).cast("int")).as("label"))
-        .join(edges, "src")
-        .select(col("dst").as("id"), col("label"))
-      // listener: most frequent heard label, ties -> smallest label
-      val heard = spoken.groupBy("id", "label").agg(count(lit(1)).as("cnt"))
-        .groupBy("id").agg(min(struct(-col("cnt"), col("label"))).as("pick"))
-        .select(col("id"), col("pick.label").as("accepted"))
-      state.select("id", "memory").join(heard, Seq("id"), "left")
-        .select(col("id"),
-          when(col("accepted").isNull, col("memory"))
-            .otherwise(concat(col("memory"), array(col("accepted")))).as("memory"),
-          lit(true).as(SuperstepLoop.ActiveCol))
+    val loop = GraphOps.withShuffleWidth(spark, parts) {
+      SuperstepLoop.run(init, LoopConfig(maxIterations)) { (state, iter) =>
+        // speaker: uniform index into memory = frequency-proportional draw
+        val spoken = state
+          .select(col("id").as("src"),
+            element_at(col("memory"),
+              (pmod(xxhash64(col("id"), lit(iter), lit(seed)),
+                    size(col("memory"))) + 1).cast("int")).as("label"))
+          .join(edges, "src")
+          .select(col("dst").as("id"), col("label"))
+        // listener: most frequent heard label, ties -> smallest label
+        val heard = spoken.groupBy("id", "label").agg(count(lit(1)).as("cnt"))
+          .groupBy("id").agg(min(struct(-col("cnt"), col("label"))).as("pick"))
+          .select(col("id"), col("pick.label").as("accepted"))
+        state.select("id", "memory").join(heard, Seq("id"), "left")
+          .select(col("id"),
+            when(col("accepted").isNull, col("memory"))
+              .otherwise(concat(col("memory"), array(col("accepted")))).as("memory"),
+            lit(true).as(SuperstepLoop.ActiveCol))
+      }
     }
 
     // post-process: labels with frequency >= threshold over the memory size

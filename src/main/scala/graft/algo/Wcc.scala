@@ -19,6 +19,9 @@ final case class WccConfig(
   checkpointDir: Option[String] = None,
   checkpointInterval: Int = 1,
   numPartitions: Option[Int] = None,
+  /** [[Wcc.runStar]] only: once the contracted edge set has at most this
+    * many rows, it is finished with a driver-side union-find; -1 never
+    * hands off. [[Wcc.run]] (hash-min) has no local tail and ignores it. */
   localSolveThreshold: Long = 100000L,
   /** Supersteps chained lazily per driver action (LoopConfig.fusedSteps):
     * >1 checks convergence only at batch boundaries — at most fusedSteps-1
@@ -64,8 +67,10 @@ object Wcc {
     val init = initState(graph.vertices, cfg.seedProperty, parts)
 
     val loopCfg = LoopConfig(cfg.maxSteps, cfg.checkpointDir, cfg.checkpointInterval,
-      fusedSteps = cfg.fusedSteps, shuffleWidth = Some(parts))
-    val result = SuperstepLoop.run(init, loopCfg)((state, _) => step(undirected)(state))
+      fusedSteps = cfg.fusedSteps)
+    val result = GraphOps.withShuffleWidth(spark, parts) {
+      SuperstepLoop.run(init, loopCfg)((state, _) => step(undirected)(state))
+    }
     undirected.unpersist(false)
 
     val comps = result.state.select(col("id"), col("comp").as("componentId"))
@@ -98,24 +103,10 @@ object Wcc {
   }
 
   /** One hash-min superstep over `state` (id, comp, _active), hash-partitioned
-    * by id like the src-partitioned `undirected` edges. Both joins build
-    * their hash table on the V-row side (the active frontier, then the
-    * per-vertex minimum), so the edge table is never sorted and the
-    * superstep's only exchange is the min-aggregation's. */
-  private[graft] def step(undirected: DataFrame)(state: DataFrame): DataFrame = {
-    val candidates = state
-      .filter(col(SuperstepLoop.ActiveCol))
-      .select(col("id").as("src"), col("comp"))
-      .hint("shuffle_hash")
-      .join(undirected, "src")
-      .select(col("dst").as("id"), col("comp").as("cand"))
-      .groupBy("id").agg(min("cand").as("cand"))
-    state.select("id", "comp").join(candidates.hint("shuffle_hash"), Seq("id"), "left")
-      .select(col("id"), least(col("comp"), col("cand")).as("comp"),
-              (col("cand") < col("comp")).as("_changed"))
-      .withColumn(SuperstepLoop.ActiveCol, coalesce(col("_changed"), lit(false)))
-      .drop("_changed")
-  }
+    * by id like the src-partitioned `undirected` edges: every changed vertex
+    * offers its label to its neighbors, which keep the minimum. */
+  private[graft] def step(undirected: DataFrame)(state: DataFrame): DataFrame =
+    SuperstepLoop.relax(state, undirected, "comp", col("comp"), min = true)
 
   /** Star-contraction WCC (alternating large-star / small-star, Kiveris et
     * al., "Connected Components in MapReduce and Beyond") — O(log n) rounds

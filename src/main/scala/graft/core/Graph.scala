@@ -150,8 +150,9 @@ object GraphOps {
     * Floor of 2, never 1: a single-partition output satisfies every
     * distribution requirement, so Catalyst drops all exchanges and fuses a
     * whole superstep chain into one task of nested joins — which re-enters a
-    * freed SortExec sorter (see [[graft.algo.Scc]], where this width scaling
-    * was first applied per peeling round). */
+    * freed SortExec sorter (NPE in UnsafeExternalSorter.insertRecord, seen on
+    * the sf0.001 tail of [[graft.algo.Scc]], where this width scaling was
+    * first applied per peeling round). */
   def adaptiveParts(spark: SparkSession, rows: Long, rowsPerPart: Long = 25000L): Int = {
     val cap = spark.sessionState.conf.numShufflePartitions
     math.max(2L, math.min(cap.toLong, rows / rowsPerPart + 1L)).toInt

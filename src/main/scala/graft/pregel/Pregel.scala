@@ -140,67 +140,68 @@ final class Pregel private (graph: PropertyGraph) {
 
     // superstep shuffles sized to the edge table (session width at scale,
     // data-sized on small graphs — see GraphOps.adaptiveParts)
-    val width = graft.core.GraphOps.adaptiveParts(
-      graph.edges.sparkSession, graph.edges.count())
+    val spark = graph.edges.sparkSession
+    val width = graft.core.GraphOps.adaptiveParts(spark, graph.edges.count())
 
-    val result = SuperstepLoop.run(init, LoopConfig(
-      maxSteps = maxIterations, checkpointDir = checkpointDir,
-      checkpointInterval = checkpointInterval, fusedSteps = fusedSteps,
-      shuffleWidth = Some(width),
-      checkpointKeepLast = checkpointKeepLast)) { (state0, _) =>
-      // masterCompute: one 1-row aggregate over ALL vertices' current state,
-      // broadcast back into the superstep's own plan (no driver round-trip;
-      // chains lazily under fusedSteps like the rest of the step)
-      val masterRow: Option[DataFrame] =
-        if (masterAggs.isEmpty) None
-        else {
-          val aggs = masterAggs.map { case (n, a) => a.as(s"_pregel_master_$n") }
-          Some(state0.agg(aggs.head, aggs.tail: _*))
-        }
-      val state = masterRow.fold(state0)(r => state0.crossJoin(broadcast(r)))
-      // Sender must be active (classic Pregel: halted vertices don't compute).
-      // The sender of a dst-bound message is the edge's src and vice versa,
-      // so each direction filters activity on its own endpoint.
-      def endpoint(side: String, activeOnly: Boolean): DataFrame = {
-        val base = if (activeOnly) state.filter(col(SuperstepLoop.ActiveCol)) else state
-        base.select(col("id").as(s"__${side}_id"),
-          struct(stateCols.map(col): _*).as(s"_pregel_$side"))
-      }
-      // One DataFrame per declared message; the union below is free (no
-      // shuffle happens until the reducer's groupBy).
-      def msgsFor(msgs: Seq[Column], toCol: String, senderSide: String,
-                  otherSide: String): Seq[DataFrame] =
-        msgs.map { m =>
-          var t = edges.join(endpoint(senderSide, activeOnly = true),
-            col(senderSide) === col(s"__${senderSide}_id"))
-          // the non-sender endpoint's state joins in only if referenced —
-          // sender-only messages keep a superstep at ONE state-edges join
-          if (references(msgs, s"_pregel_$otherSide."))
-            t = t.join(endpoint(otherSide, activeOnly = false),
-              col(otherSide) === col(s"__${otherSide}_id"))
-          // master values join into the message frame only if referenced
-          masterRow.foreach { r =>
-            if (references(msgs, "_pregel_master_")) t = t.crossJoin(broadcast(r))
+    val result = graft.core.GraphOps.withShuffleWidth(spark, width) {
+      SuperstepLoop.run(init, LoopConfig(
+        maxSteps = maxIterations, checkpointDir = checkpointDir,
+        checkpointInterval = checkpointInterval, fusedSteps = fusedSteps,
+        checkpointKeepLast = checkpointKeepLast)) { (state0, _) =>
+        // masterCompute: one 1-row aggregate over ALL vertices' current state,
+        // broadcast back into the superstep's own plan (no driver round-trip;
+        // chains lazily under fusedSteps like the rest of the step)
+        val masterRow: Option[DataFrame] =
+          if (masterAggs.isEmpty) None
+          else {
+            val aggs = masterAggs.map { case (n, a) => a.as(s"_pregel_master_$n") }
+            Some(state0.agg(aggs.head, aggs.tail: _*))
           }
-          t.select(col(toCol).as("id"), m.as("_pregel_msg"))
-            .filter(col("_pregel_msg").isNotNull)
+        val state = masterRow.fold(state0)(r => state0.crossJoin(broadcast(r)))
+        // Sender must be active (classic Pregel: halted vertices don't compute).
+        // The sender of a dst-bound message is the edge's src and vice versa,
+        // so each direction filters activity on its own endpoint.
+        def endpoint(side: String, activeOnly: Boolean): DataFrame = {
+          val base = if (activeOnly) state.filter(col(SuperstepLoop.ActiveCol)) else state
+          base.select(col("id").as(s"__${side}_id"),
+            struct(stateCols.map(col): _*).as(s"_pregel_$side"))
         }
+        // One DataFrame per declared message; the union below is free (no
+        // shuffle happens until the reducer's groupBy).
+        def msgsFor(msgs: Seq[Column], toCol: String, senderSide: String,
+                    otherSide: String): Seq[DataFrame] =
+          msgs.map { m =>
+            var t = edges.join(endpoint(senderSide, activeOnly = true),
+              col(senderSide) === col(s"__${senderSide}_id"))
+            // the non-sender endpoint's state joins in only if referenced —
+            // sender-only messages keep a superstep at ONE state-edges join
+            if (references(msgs, s"_pregel_$otherSide."))
+              t = t.join(endpoint(otherSide, activeOnly = false),
+                col(otherSide) === col(s"__${otherSide}_id"))
+            // master values join into the message frame only if referenced
+            masterRow.foreach { r =>
+              if (references(msgs, "_pregel_master_")) t = t.crossJoin(broadcast(r))
+            }
+            t.select(col(toCol).as("id"), m.as("_pregel_msg"))
+              .filter(col("_pregel_msg").isNotNull)
+          }
 
-      val allMsgs = msgsFor(msgsToDst, "dst", "src", "dst") ++
-        msgsFor(msgsToSrc, "src", "dst", "src")
-      val reduced = allMsgs.reduce(_ unionByName _)
-        .groupBy("id").agg(agg.as("_pregel_msg"))
+        val allMsgs = msgsFor(msgsToDst, "dst", "src", "dst") ++
+          msgsFor(msgsToSrc, "src", "dst", "src")
+        val reduced = allMsgs.reduce(_ unionByName _)
+          .groupBy("id").agg(agg.as("_pregel_msg"))
 
-      val joined = state.join(reduced, Seq("id"), "left")
-      val received = col("_pregel_msg").isNotNull
-      val updated = vertexCols.map(v =>
-        when(received, v.afterMsg).otherwise(col(v.name)).as(v.name))
-      // halt predicate sees the UPDATED columns: evaluate via a two-step select
-      joined.select(col("id") +: updated :+ col("_pregel_msg"): _*)
-        .select(col("id") +: stateCols.map(col) :+ (haltCond match {
-          case Some(h) => col("_pregel_msg").isNotNull && !coalesce(h, lit(false))
-          case None    => col("_pregel_msg").isNotNull
-        }).as(SuperstepLoop.ActiveCol): _*)
+        val joined = state.join(reduced, Seq("id"), "left")
+        val received = col("_pregel_msg").isNotNull
+        val updated = vertexCols.map(v =>
+          when(received, v.afterMsg).otherwise(col(v.name)).as(v.name))
+        // halt predicate sees the UPDATED columns: evaluate via a two-step select
+        joined.select(col("id") +: updated :+ col("_pregel_msg"): _*)
+          .select(col("id") +: stateCols.map(col) :+ (haltCond match {
+            case Some(h) => col("_pregel_msg").isNotNull && !coalesce(h, lit(false))
+            case None    => col("_pregel_msg").isNotNull
+          }).as(SuperstepLoop.ActiveCol): _*)
+      }
     }
     result.state.select(col("id") +: stateCols.map(col): _*)
   }

@@ -1,6 +1,6 @@
 package graft.pregel
 
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlCompat, Observation, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlCompat, Observation, Row, SparkSession, functions}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.io.SnapshotStore
@@ -25,21 +25,6 @@ import graft.io.SnapshotStore
   *                           its final state too.
   * @param checkpointInterval snapshot cadence (1 = every iteration, the
   *                           north-rule default).
-  * @param truncateInterval   RDD-lineage cut cadence via localCheckpoint,
-  *                           with or without durable checkpoints. (The
-  *                           LOGICAL plan is already truncated every
-  *                           iteration at zero cost — see
-  *                           [[GraftSqlCompat.truncatePlan]] — but task
-  *                           closures serialize the physical RDD chain,
-  *                           which must be cut periodically too; reading a
-  *                           snapshot back would cut it, but would also lose
-  *                           the state's partitioning.)
-  * @param disableAqeInLoop   adaptive execution re-plans every tiny superstep
-  *                           stage and multiplies fixed per-iteration latency
-  *                           ~5x (measured); the loop turns AQE off for its
-  *                           own jobs and restores the previous setting after.
-  *                           Skew inside a superstep is handled by the hub
-  *                           split / salting of the edge tables instead.
   * @param fusedSteps         how many supersteps to chain LAZILY between
   *                           driver actions. 1 (default) = classic behavior:
   *                           one job per superstep, convergence checked after
@@ -58,24 +43,12 @@ import graft.io.SnapshotStore
   *                           per-superstep driver round-trip — the fixed cost
   *                           that capped scaling efficiency at small
   *                           per-superstep compute.
-  * @param shuffleWidth       when set, `spark.sql.shuffle.partitions` is
-  *                           scoped to this for the loop's jobs (algorithms
-  *                           pass GraphOps.adaptiveParts so superstep
-  *                           shuffles are sized to the graph, not the
-  *                           session default). Must equal the width the
-  *                           algorithm used for its explicit edge/state
-  *                           repartitions, or the co-partitioned joins gain
-  *                           exchanges back.
   */
 final case class LoopConfig(
   maxSteps: Int,
   checkpointDir: Option[String] = None,
   checkpointInterval: Int = 1,
-  truncateInterval: Int = 8,
-  disableAqeInLoop: Boolean = true,
-  storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
   fusedSteps: Int = 1,
-  shuffleWidth: Option[Int] = None,
   /** when > 0, expire all but this many snapshots after each checkpoint
     * commit (SnapshotStore.expire) so a long run's disk stays O(keepLast),
     * not O(iterations); 0 keeps every snapshot (full history, the
@@ -119,17 +92,29 @@ final case class LoopResult(
   * superstep 1 would shuffle the edge table again. The initial state must be
   * partitioned by `id` after its final projection: a projection that also
   * aliases `id` (`id AS comp`) leaves a partitioning that plan truncation
-  * reads as `hashpartitioning(comp)`.
+  * reads as `hashpartitioning(comp)`. The loop plans at the session's
+  * shuffle width: callers scope it to the width of their inputs with
+  * [[graft.core.GraphOps.withShuffleWidth]] around the whole call.
   */
 object SuperstepLoop {
 
   val ActiveCol = "_active"
 
+  /** RDD-lineage cut cadence via localCheckpoint, with or without durable
+    * checkpoints. (The LOGICAL plan is already truncated every iteration at
+    * zero cost — see [[GraftSqlCompat.truncatePlan]] — but task closures
+    * serialize the physical RDD chain, which must be cut periodically too;
+    * reading a snapshot back would cut it, but would also lose the state's
+    * partitioning.) */
+  private val TruncateInterval = 8
+
+  private val StateStorage = StorageLevel.MEMORY_AND_DISK
+
   private val Verbose = sys.env.get("GRAFT_LOOP_VERBOSE").contains("1")
 
   def run(init: DataFrame, cfg: LoopConfig)
          (step: (DataFrame, Int) => DataFrame): LoopResult =
-    withLoopConf(init.sparkSession, cfg) {
+    withIterationConf(init.sparkSession) {
       loop(init, 0, cfg)(step)
     }
 
@@ -152,13 +137,14 @@ object SuperstepLoop {
         val state  = spark.read.parquet(snap.dataPath)
         if (active == 0L || iter >= cfg.maxSteps)
           LoopResult(state, iter, active == 0L, Seq.empty)
-        else withLoopConf(spark, cfg) {
+        else withIterationConf(spark) {
           loop(state, iter, cfg)(step)
         }
     }
   }
 
-  /** Loop-scoped session conf (restored afterwards):
+  /** Loop-scoped session conf, also used by iterative algorithms that drive
+    * their own loop (MsBfs, MaxKCut); previous settings restored after:
     *  - AQE off: per-stage re-planning multiplies fixed superstep latency
     *  - broadcast joins off: Catalyst would otherwise broadcast the V-row
     *    state through the driver EVERY superstep (a serial bottleneck that
@@ -171,27 +157,10 @@ object SuperstepLoop {
     *    size (it needs size < threshold × shuffle partitions), so every
     *    unhinted join is a sort-merge join. Step bodies that must not sort
     *    the edge table every superstep hint `shuffle_hash` on their V-row
-    *    side (PageRank.step, Wcc.step, LabelPropagation.syncStep).
+    *    side (PageRank.step, LabelPropagation.syncStep, [[relax]]).
     */
-  private def withLoopConf[A](spark: SparkSession, cfg: LoopConfig)(body: => A): A =
-    withIterationConf(spark, disable = cfg.disableAqeInLoop,
-      width = cfg.shuffleWidth)(body)
-
-  /** Same conf scoping for iterative algorithms that drive their own loop
-    * (MsBfs, MaxKCut): AQE + auto-broadcast off for the loop's jobs (joins
-    * that should hash instead of sort carry a `shuffle_hash` hint), previous
-    * settings restored after. `width` additionally scopes
-    * `spark.sql.shuffle.partitions` (see GraphOps.adaptiveParts) —
-    * physical planning happens at each materialize, i.e. inside this scope,
-    * so every groupBy/join shuffle in the loop gets the data-sized width. */
-  private[graft] def withIterationConf[A](spark: SparkSession,
-                                          disable: Boolean = true,
-                                          width: Option[Int] = None)(body: => A): A = {
-    val off =
-      if (disable) Seq(AqeKey -> "false", "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-      else Nil
-    withConf(spark, off ++ width.map("spark.sql.shuffle.partitions" -> _.toString))(body)
-  }
+  private[graft] def withIterationConf[A](spark: SparkSession)(body: => A): A =
+    withConf(spark, Seq(AqeKey -> "false", "spark.sql.autoBroadcastJoinThreshold" -> "-1"))(body)
 
   private val AqeKey = "spark.sql.adaptive.enabled"
 
@@ -226,12 +195,49 @@ object SuperstepLoop {
     withConf(df.sparkSession, Seq(AqeKey -> "false"))(input.persist())
   }
 
+  /** One monotone-relaxation superstep: every active vertex sends
+    * `cand` (an expression over its `value` and the edge row) along `edges`,
+    * which [[persistInput]] holds partitioned by `from`; each `to` endpoint
+    * keeps the min (`min = true`) or max of its `value` and its best
+    * candidate, and is active next superstep iff that improved it. Other
+    * state columns pass through in place.
+    *
+    * `state` (id, value, …, `_active`) is id-partitioned at the edges'
+    * width. Both joins build their hash table on the V-row side (the active
+    * frontier, then the per-vertex best candidate), so the edge table is
+    * never sorted, and the superstep's only exchange is the aggregate's,
+    * which map-side combines. This is the update rule of hash-min WCC,
+    * BFS, SSSP (Dijkstra's distance phase), A* and SCC's coloring and
+    * backward-reach fixpoints. (States whose build side is not V-sized,
+    * such as the source × vertex distances of all-pairs shortest paths and
+    * influence maximization, keep their own steps.) */
+  private[graft] def relax(state: DataFrame, edges: DataFrame, value: String, cand: Column,
+                           min: Boolean, from: String = "src", to: String = "dst"): DataFrame = {
+    val candidates = state
+      .filter(col(ActiveCol))
+      .select(col("id").as(from), col(value))
+      .hint("shuffle_hash")
+      .join(edges, from)
+      .select(col(to).as("id"), cand.as("_cand"))
+      .groupBy("id").agg((if (min) functions.min("_cand") else max("_cand")).as("_cand"))
+    val (better, best) =
+      if (min) (col("_cand") < col(value), least(col(value), col("_cand")))
+      else (col("_cand") > col(value), greatest(col(value), col("_cand")))
+    state.select(state.columns.filter(_ != ActiveCol).map(col): _*)
+      .join(candidates.hint("shuffle_hash"), Seq("id"), "left")
+      .select(state.columns.toSeq.map {
+        case ActiveCol => coalesce(better, lit(false)).as(ActiveCol)
+        case `value`   => best.as(value)
+        case c         => col(c)
+      }: _*)
+  }
+
   private def activeCount: Column = count(when(col(ActiveCol), lit(1))).as("active")
 
   /** Materialize `df` (persist) and return its active count — ONE action:
     * the aggregate populates the cache and folds the count in the same job. */
-  private def materialize(df: DataFrame, cfg: LoopConfig): (DataFrame, Long) = {
-    val cached = df.persist(cfg.storageLevel)
+  private def materialize(df: DataFrame): (DataFrame, Long) = {
+    val cached = df.persist(StateStorage)
     val row: Row = cached.agg(activeCount).collect()(0)
     (cached, row.getLong(0))
   }
@@ -240,9 +246,8 @@ object SuperstepLoop {
     * and return its active count — also ONE action: the parquet write scans
     * the persisted plan, so it fills the cache, and the count is observed on
     * that write. The manifest, renamed into place last, records it. */
-  private def materializeSnapshot(df: DataFrame, dir: String, cfg: LoopConfig,
-                                  iter: Int, t0: Long): (DataFrame, Long) = {
-    val cached = df.persist(cfg.storageLevel)
+  private def materializeSnapshot(df: DataFrame, dir: String, iter: Int, t0: Long): (DataFrame, Long) = {
+    val cached = df.persist(StateStorage)
     val observed = Observation()
     lazy val active = observed.get("active").asInstanceOf[Long]
     SnapshotStore.commit(cached.observe(observed, activeCount), dir,
@@ -261,7 +266,7 @@ object SuperstepLoop {
                   (step: (DataFrame, Int) => DataFrame): LoopResult = {
     // `cached` is the handle holding storage; `state` is the plan-truncated
     // view handed to the next superstep.
-    var (cached, active) = materialize(init, cfg)
+    var (cached, active) = materialize(init)
     var state   = GraftSqlCompat.truncatePlan(cached)
     var history = Seq.empty[IterationMetrics]
     var iter    = startIter
@@ -282,8 +287,8 @@ object SuperstepLoop {
       }
       val checkpoint = cfg.checkpointDir.filter(_ => iter % cfg.checkpointInterval == 0)
       val (nextCached, nextActive) = checkpoint match {
-        case Some(dir) => materializeSnapshot(chained, dir, cfg, iter, t0)
-        case None      => materialize(chained, cfg)
+        case Some(dir) => materializeSnapshot(chained, dir, iter, t0)
+        case None      => materialize(chained)
       }
       active = nextActive
       val wall = (System.nanoTime() - t0) / 1000000L
@@ -300,7 +305,7 @@ object SuperstepLoop {
         cfg.checkpointDir.foreach(SnapshotStore.expire(_, cfg.checkpointKeepLast))
 
       val prevCached = cached
-      if (iter - lastCut >= cfg.truncateInterval && !converged && iter < cfg.maxSteps) {
+      if (iter - lastCut >= TruncateInterval && !converged && iter < cfg.maxSteps) {
         // periodic hard cut of the physical RDD chain — only when the loop
         // will actually run more supersteps (the cut is an eager full copy
         // of the state; at loop exit it would be pure waste)

@@ -101,7 +101,7 @@ class CheckpointSpec extends AnyFunSuite with SparkTestBase {
       checkpointDir = Some(dir), checkpointInterval = 1))
     assert(collectMap(ck.scores, "id", "score") == collectMap(plain.scores, "id", "score"))
     assert(SnapshotStore.snapshots(dir).size == 19)
-    // the loop never chains more than truncateInterval (8) supersteps
+    // the loop never chains more than SuperstepLoop.TruncateInterval (8) supersteps
     // between lineage cuts; a 9-iteration run is the longest uncut chain
     val uncut = PageRank.run(graph, PageRankConfig(tolerance = 0.0, maxIterations = 9))
     val ckDepth = lineageDepth(ck.scores.queryExecution.toRdd)

@@ -9,12 +9,13 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.algo.{LabelPropagation, LpConfig, PageRank, PageRankConfig, Schedule, Wcc}
+import graft.algo.{LabelPropagation, LpConfig, PageRank, PageRankConfig, Paths, Schedule, Wcc}
+import graft.core.{GraphOps, Orientation, PropertyGraph}
 import graft.io.SnapshotStore
 import graft.pregel.{LoopConfig, SuperstepLoop}
 
-/** Physical shape of superstep 1 of PageRank, WCC and LP, built the way
-  * `run` builds it: the edge inputs and the initial state come from the
+/** Physical shape of superstep 1 of PageRank, WCC, LP and the
+  * [[SuperstepLoop.relax]] kernel, built the way `run` builds it: the edge inputs and the initial state come from the
   * algorithms' own builders, set up with adaptive execution ON (a default
   * session) and never warmed by an action, and the state is persisted and
   * plan-truncated under the loop's conf, as the loop hands it to a step.
@@ -46,15 +47,17 @@ class SuperstepPlanSpec extends AnyFunSuite with SparkTestBase {
   /** (persisted handle, plan-truncated view) of `init`, as the loop holds it
     * before superstep 1. */
   private def loopState(init: DataFrame): (DataFrame, DataFrame) =
-    SuperstepLoop.withIterationConf(spark, width = Some(parts)) {
+    inLoop {
       val cached = init.persist()
       (cached, GraftSqlCompat.truncatePlan(cached))
     }
 
   private def plannedStep(step: => DataFrame): SparkPlan =
-    SuperstepLoop.withIterationConf(spark, width = Some(parts)) {
-      step.queryExecution.executedPlan
-    }
+    inLoop(step.queryExecution.executedPlan)
+
+  /** The loop's conf at the width the inputs were partitioned to. */
+  private def inLoop[A](body: => A): A =
+    GraphOps.withShuffleWidth(spark, parts)(SuperstepLoop.withIterationConf(spark)(body))
 
   private def assertIdPartitioned(name: String, state: DataFrame): Unit =
     state.queryExecution.executedPlan.outputPartitioning match {
@@ -98,12 +101,13 @@ class SuperstepPlanSpec extends AnyFunSuite with SparkTestBase {
     val augEdges = adaptive(pageRankEdges)
     val cfg = PageRankConfig()
     var afterCommit: Option[SparkPlan] = None
-    SuperstepLoop.run(PageRank.initState(augEdges, cfg),
-      LoopConfig(maxSteps = 2, checkpointDir = Some(dir), shuffleWidth = Some(parts))) {
-      (state, iter) =>
-        val next = PageRank.step(augEdges, None, cfg, 1.0)(state, iter)
-        if (iter == 2) afterCommit = Some(next.queryExecution.executedPlan)
-        next
+    GraphOps.withShuffleWidth(spark, parts) {
+      SuperstepLoop.run(PageRank.initState(augEdges, cfg),
+        LoopConfig(maxSteps = 2, checkpointDir = Some(dir))) { (state, iter) =>
+          val next = PageRank.step(augEdges, None, cfg, 1.0)(state, iter)
+          if (iter == 2) afterCommit = Some(next.queryExecution.executedPlan)
+          next
+      }
     }
     assert(SnapshotStore.snapshots(dir).map(_.meta("iteration")) == Seq("1", "2"))
     assertShape("checkpointed PageRank", afterCommit.getOrElse(fail("superstep 2 never ran")))
@@ -129,6 +133,32 @@ class SuperstepPlanSpec extends AnyFunSuite with SparkTestBase {
       assertShape(s"LP $schedule", plannedStep(
         LabelPropagation.syncStep(votes, schedule, parts)(state, 1)))
     votes.unpersist(false); cached.unpersist(false)
+  }
+
+  test("relax min superstep (SSSP shape): hash joins, one exchange") {
+    val graph = PropertyGraph(vertices, edges.withColumn("weight", col("src") * 0.5 + 1.0))
+    val (weighted, (cached, state)) = adaptive {
+      (Paths.weightedEdges(graph, Orientation.Natural, parts),
+       loopState(Paths.sourceState(vertices, 0L, 0.0, Double.PositiveInfinity, parts)))
+    }
+    assertIdPartitioned("SSSP", state)
+    assertShape("relax min", plannedStep(
+      SuperstepLoop.relax(state, weighted, "dist", col("dist") + col("weight"), min = true)))
+    weighted.unpersist(false); cached.unpersist(false)
+  }
+
+  test("relax max superstep along reversed edges (SCC-reach shape): hash joins, one exchange") {
+    val (colored, (cached, state)) = adaptive {
+      (SuperstepLoop.persistInput(edges.withColumn("color", lit(5L)), parts, "dst"),
+       loopState(vertices
+         .select(col("id"), lit(5L).as("color"), (col("id") === 5L).as("reached"),
+           (col("id") === 5L).as(SuperstepLoop.ActiveCol))
+         .repartition(parts, col("id"))))
+    }
+    assertIdPartitioned("SCC reach", state)
+    assertShape("relax max", plannedStep(SuperstepLoop.relax(state, colored, "reached",
+      lit(true), min = false, from = "dst", to = "src")))
+    colored.unpersist(false); cached.unpersist(false)
   }
 
   test("persistInput dedups on its own exchange and restores adaptive execution") {

@@ -29,8 +29,9 @@ class WccSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("fused supersteps produce identical components") {
-    // the distributed path (localSolveThreshold = -1) with batched
-    // convergence checks must equal the per-round-checked run exactly
+    // hash-min with batched convergence checks must equal the
+    // per-round-checked run exactly (localSolveThreshold only affects
+    // runStar; it is set the way perfbench sets it)
     val fused = Wcc.run(graph, WccConfig(localSolveThreshold = -1L, fusedSteps = 4))
     val plain = Wcc.run(graph, WccConfig(localSolveThreshold = -1L))
     assert(collectLongMap(fused.components, "id", "componentId") ==
