@@ -599,7 +599,7 @@ object SparkEntry {
       Paths.collapsePath(Seq(e, e)).orderBy("src", "dst")
     }),
     "q_hits" -> ((s, dir) =>
-      // 3 iterations, kept below HitsConfig.rescaleEvery so the unrolled
+      // 3 iterations, kept below Hits.RescaleEvery (4) so the unrolled
       // oracle replays the pure unnormalized recurrence + final L2 exactly
       Hits.run(denseGraph(s, dir), HitsConfig(maxIterations = 3))
         .select(col("id"), graft.core.Num.roundTo(col("hub"), 6).as("hub"),
@@ -2906,7 +2906,7 @@ object SparkEntry {
   /** Replays graft.algo.Hits exactly: UNNORMALIZED alternating sums (HITS is
     * linear, so per-half-step L2 normalization is a common positive scale)
     * with ONE final L2 normalization per column. Assumes
-    * iterations < HitsConfig.rescaleEvery (no in-loop rescale fires). */
+    * iterations < Hits.RescaleEvery (4; no in-loop rescale fires). */
   private def hitsSql(edgesSql: String, iterations: Int): String = {
     val steps = (1 to iterations).map { k =>
       val p = s"h${k - 1}"

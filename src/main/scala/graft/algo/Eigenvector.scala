@@ -36,13 +36,13 @@ object Eigenvector {
     val edgesW    = GraphOps.withWeight(graph.edges)
 
     // Weighted: message = next * weight / weightedDegree(src); unweighted: next.
-    val msgEdges = (if (cfg.weighted) {
+    val msgEdges = SuperstepLoop.persistInput(if (cfg.weighted) {
       val wdeg = edgesW.groupBy("src").agg(sum("weight").as("wdeg"))
       edgesW.join(wdeg, "src").filter(col("wdeg") > 0.0)
         .select(col("src"), col("dst"), (col("weight") / col("wdeg")).as("norm"))
     } else {
       edgesW.select(col("src"), col("dst"), lit(1.0).as("norm"))
-    }).repartition(parts, col("src")).persist()
+    }, parts, "src")
 
     val initValue =
       if (cfg.sourceNodes.isEmpty) 1.0 / nodeCount else 1.0 / cfg.sourceNodes.size
@@ -66,29 +66,7 @@ object Eigenvector {
     // is an in-plan broadcast, so it chains lazily like the rest of the step.
     val loopCfg = LoopConfig(cfg.maxIterations - 1, cfg.checkpointDir, cfg.checkpointInterval,
       fusedSteps = cfg.fusedSteps)
-    val result = SuperstepLoop.run(init, loopCfg) { (state, _) =>
-      val inbox = state
-        .select(col("id").as("src"), col("next"))
-        .join(msgEdges, "src")
-        .select(col("dst").as("id"), (col("next") * col("norm")).as("msg"))
-        .groupBy("id").agg(sum("msg").as("msum"))
-      val raw = state.select("id", "rank")
-        .join(inbox, Seq("id"), "left")
-        .select(col("id"), col("rank"),
-          (col("rank") + coalesce(col("msum"), lit(0.0))).as("next"))
-      // masterCompute: the L2 norm as a broadcast 1-row aggregate joined
-      // back in-plan (explicit hint — the loop conf only disables AUTO
-      // broadcasts). The raw subtree is evaluated twice within the job
-      // (once for the scalar, once for the update) — both sides read the
-      // inbox aggregation's shuffle files, nothing is recomputed upstream.
-      val l2 = raw.agg(sqrt(sum(col("next") * col("next"))).as("__l2"))
-        .select(when(col("__l2") === 0.0, lit(1.0)).otherwise(col("__l2")).as("__l2"))
-      raw.crossJoin(broadcast(l2))
-        .select(col("id"), (col("next") / col("__l2")).as("newRank"),
-          col("next"), col("rank"))
-        .select(col("id"), col("newRank").as("rank"), col("next"),
-          (abs(col("newRank") - col("rank")) > lit(cfg.tolerance)).as(SuperstepLoop.ActiveCol))
-    }
+    val result = SuperstepLoop.run(init, loopCfg)((state, _) => step(msgEdges, cfg.tolerance)(state))
     msgEdges.unpersist(false)
 
     val scores = Scaler.apply(cfg.scaler,
@@ -98,5 +76,28 @@ object Eigenvector {
       if (result.didConverge) result.ranIterations else cfg.maxIterations,
       result.didConverge)
     }
+  }
+
+  /** One power-iteration superstep over `state` (id, rank, next, _active):
+    * every vertex sends `next * norm` along the src-partitioned `msgEdges`
+    * through the superstep kernel, and `next` becomes rank + Σ messages.
+    * masterCompute: the L2 norm as a broadcast 1-row aggregate joined back
+    * in-plan (explicit hint — the loop conf only disables AUTO broadcasts).
+    * The raw subtree is evaluated twice within the job (once for the scalar,
+    * once for the update); both read the inbox aggregation's shuffle files,
+    * nothing upstream is recomputed. */
+  private[graft] def step(msgEdges: DataFrame, tolerance: Double)(state: DataFrame): DataFrame = {
+    val inbox = SuperstepLoop.gather(state.select("id", "next"), msgEdges,
+      (col("next") * col("norm")).as("msg"), sum("msg").as("msum"))
+    val raw = SuperstepLoop.joinBack(state.select("id", "rank"), inbox)
+      .select(col("id"), col("rank"),
+        (col("rank") + coalesce(col("msum"), lit(0.0))).as("next"))
+    val l2 = raw.agg(sqrt(sum(col("next") * col("next"))).as("__l2"))
+      .select(when(col("__l2") === 0.0, lit(1.0)).otherwise(col("__l2")).as("__l2"))
+    raw.crossJoin(broadcast(l2))
+      .select(col("id"), (col("next") / col("__l2")).as("newRank"),
+        col("next"), col("rank"))
+      .select(col("id"), col("newRank").as("rank"), col("next"),
+        (abs(col("newRank") - col("rank")) > lit(tolerance)).as(SuperstepLoop.ActiveCol))
   }
 }

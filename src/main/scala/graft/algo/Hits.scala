@@ -5,18 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.core.{GraphOps, PropertyGraph}
 import graft.pregel.{LoopConfig, SuperstepLoop}
 
-/** @param fusedSteps   iterations chained lazily per driver action (see
-  *                     [[graft.pregel.LoopConfig.fusedSteps]]). HITS runs a
-  *                     FIXED iteration count (no convergence check), so
-  *                     fusing loses nothing.
-  * @param rescaleEvery overflow guard: every N iterations the unnormalized
-  *                     scores are divided (in-plan, one broadcast scalar) by
-  *                     the auth L2. Pure common scaling — the final
-  *                     normalization absorbs it — but it bounds magnitude
-  *                     growth to ||A||^(2N) between rescales, which keeps a
-  *                     hub-degree-1e6 web graph far from double overflow. */
-final case class HitsConfig(maxIterations: Int = 20, numPartitions: Option[Int] = None,
-                            fusedSteps: Int = 5, rescaleEvery: Int = 4)
+final case class HitsConfig(maxIterations: Int = 20, numPartitions: Option[Int] = None)
 
 /** HITS hubs & authorities (reference: alpha/alpha-proc/src/main/java/org/
   * neo4j/gds/pregel/Hits.java — a Pregel computation alternating
@@ -31,11 +20,23 @@ final case class HitsConfig(maxIterations: Int = 20, numPartitions: Option[Int] 
   * fully-fusable shape as PageRank, with no per-half-step broadcast
   * subquery jobs (the round-2 form paid two of those per iteration: each
   * re-ran a multi-stage subtree, tripling the per-iteration job count).
-  * A periodic in-plan rescale (`rescaleEvery`) guards overflow at scale;
+  * A periodic in-plan rescale (`RescaleEvery`) guards overflow at scale;
   * the final normalization is two scalars off the loop's cached state.
   * Returns (id, hub, auth) with both columns L2-normalized.
   */
 object Hits {
+
+  /** Iterations chained lazily per driver action (see
+    * [[graft.pregel.LoopConfig.fusedSteps]]). HITS runs a FIXED iteration
+    * count (no convergence check), so fusing loses nothing. */
+  private val FusedSteps = 5
+
+  /** Overflow guard: every this many iterations the unnormalized scores are
+    * divided (in-plan, one broadcast scalar) by the auth L2. Pure common
+    * scaling — the final normalization absorbs it — but it bounds magnitude
+    * growth to ||A||^(2N) between rescales, which keeps a hub-degree-1e6 web
+    * graph far from double overflow. */
+  private val RescaleEvery = 4
 
   def run(graph: PropertyGraph, cfg: HitsConfig = HitsConfig()): DataFrame = {
     val spark = graph.edges.sparkSession
@@ -57,31 +58,19 @@ object Hits {
       .select(col("id"), lit(1.0).as("hub"), lit(1.0).as("auth"),
         lit(true).as(SuperstepLoop.ActiveCol))
 
-    val result = SuperstepLoop.run(init,
-        LoopConfig(cfg.maxIterations, fusedSteps = cfg.fusedSteps)) { (state, iter) =>
-      // auth(v) = Σ hub(u) for u→v — unnormalized
-      val authRaw = state.select(col("id").as("src"), col("hub"))
-        .join(edges, "src")
-        .groupBy(col("dst").as("id")).agg(sum("hub").as("a"))
-      val s1 = state.select("id", "hub").join(authRaw, Seq("id"), "left")
-        .select(col("id"), col("hub"), coalesce(col("a"), lit(0.0)).as("auth"))
-      // hub(u) = Σ auth(v) for u→v — unnormalized
-      val hubRaw = s1.select(col("id").as("dst"), col("auth"))
-        .join(edgesByDst, "dst")
-        .groupBy(col("src").as("id")).agg(sum("auth").as("h"))
-      val next = s1.select("id", "auth").join(hubRaw, Seq("id"), "left")
-        .select(col("id"), coalesce(col("h"), lit(0.0)).as("hub"), col("auth"),
-          lit(true).as(SuperstepLoop.ActiveCol))
-      if (cfg.rescaleEvery > 0 && iter % cfg.rescaleEvery == 0) {
-        // overflow guard: common positive scale, absorbed by the final
-        // normalization (broadcast 1-row scalar, once per rescaleEvery)
-        val l2 = next.agg(sqrt(sum(col("auth") * col("auth"))).as("__l2"))
-          .select(when(col("__l2") === 0.0, lit(1.0)).otherwise(col("__l2")).as("__l2"))
-        next.crossJoin(broadcast(l2))
-          .select(col("id"), (col("hub") / col("__l2")).as("hub"),
-            (col("auth") / col("__l2")).as("auth"),
-            lit(true).as(SuperstepLoop.ActiveCol))
-      } else next
+    val result = SuperstepLoop.run(init, LoopConfig(cfg.maxIterations, fusedSteps = FusedSteps)) {
+      (state, iter) =>
+        val next = hubStep(edgesByDst)(authStep(edges)(state))
+        if (iter % RescaleEvery == 0) {
+          // overflow guard: common positive scale, absorbed by the final
+          // normalization (broadcast 1-row scalar, once per RescaleEvery)
+          val l2 = next.agg(sqrt(sum(col("auth") * col("auth"))).as("__l2"))
+            .select(when(col("__l2") === 0.0, lit(1.0)).otherwise(col("__l2")).as("__l2"))
+          next.crossJoin(broadcast(l2))
+            .select(col("id"), (col("hub") / col("__l2")).as("hub"),
+              (col("auth") / col("__l2")).as("auth"),
+              lit(true).as(SuperstepLoop.ActiveCol))
+        } else next
     }
     edges.unpersist(false)
     edgesByDst.unpersist(false)
@@ -98,5 +87,23 @@ object Hits {
       (col("hub") / lit(l2h)).as("hub"),
       (col("auth") / lit(l2a)).as("auth"))
     }
+  }
+
+  /** auth(v) = Σ hub(u) for u→v, unnormalized: `state` (id, hub, …) gathers
+    * along the src-partitioned `edges`; returns (id, hub, auth). */
+  private[graft] def authStep(edges: DataFrame)(state: DataFrame): DataFrame = {
+    val hubs = state.select("id", "hub")
+    SuperstepLoop.joinBack(hubs, SuperstepLoop.gather(hubs, edges, col("hub"), sum("hub").as("a")))
+      .select(col("id"), col("hub"), coalesce(col("a"), lit(0.0)).as("auth"))
+  }
+
+  /** hub(u) = Σ auth(v) for u→v, unnormalized: `state` (id, auth, …) gathers
+    * back along the dst-partitioned `edgesByDst`; returns (id, hub, auth, _active). */
+  private[graft] def hubStep(edgesByDst: DataFrame)(state: DataFrame): DataFrame = {
+    val auths = state.select("id", "auth")
+    SuperstepLoop.joinBack(auths, SuperstepLoop.gather(auths, edgesByDst, col("auth"),
+        sum("auth").as("h"), from = "dst", to = "src"))
+      .select(col("id"), coalesce(col("h"), lit(0.0)).as("hub"), col("auth"),
+        lit(true).as(SuperstepLoop.ActiveCol))
   }
 }

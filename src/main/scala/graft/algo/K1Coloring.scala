@@ -135,6 +135,8 @@ object K1Coloring {
       .repartition(parts, col("id"))
       .select(col("id"), lit(0L).as("color"), lit(true).as(SuperstepLoop.ActiveCol))
 
+    // Not on the SuperstepLoop.gather kernel: conflict detection joins the
+    // state at BOTH endpoints of each edge, and only the losers gather.
     val result = SuperstepLoop.run(init, LoopConfig(cfg.maxIterations)) { (state, _) =>
       // Frontier-proportional round. Invariant: every monochromatic edge has
       // at least one ACTIVE (recolored-last-round) endpoint — untouched

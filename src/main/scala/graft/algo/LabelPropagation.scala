@@ -196,7 +196,9 @@ object LabelPropagation {
     * One exchange per iteration: the votes are hash-partitioned by `src`
     * once, and the (src, cand) sum, the per-src argmax and the join back
     * onto the state all reuse that partitioning. Both joins build their
-    * hash table on the V-row side, so the edge table is never sorted. */
+    * hash table on the V-row side, so the edge table is never sorted. Not
+    * on the [[SuperstepLoop.gather]] kernel: the weighted vote is two-level
+    * (sum per (src, cand), then argmax per src), not one reducer per id. */
   private[graft] def syncStep(edges: DataFrame, schedule: Schedule, parts: Int)
                              (state: DataFrame, iter: Int): DataFrame = {
     // Gather the labels of out-neighbors: vote (src ← label(dst), weight).

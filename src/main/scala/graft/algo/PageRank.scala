@@ -184,7 +184,10 @@ object PageRank {
   }
 
   /** One superstep over `state` (id, rank, delta, _active), hash-partitioned
-    * by id like the src-partitioned `augEdges`. */
+    * by id like the src-partitioned `augEdges`. Not on the
+    * [[SuperstepLoop.gather]] kernel: the carrier rows of `augEdges` carry
+    * each node's own rank through the same join, so the state is referenced
+    * once per step instead of twice (scatter and join-back). */
   private[graft] def step(augEdges: DataFrame, hubPath: Option[(DataFrame, DataFrame)],
                           cfg: PageRankConfig, deltaCoefficient: Double)
                          (state: DataFrame, iter: Int): DataFrame = {

@@ -83,6 +83,8 @@ object ShortestPaths {
     * chain ([[astar]]) — one driver action per `fuse` hops either way. */
   private def walkPreds(predTable: DataFrame, start: DataFrame, source: Long,
                         maxRounds: Int, parts: Int, fuse: Int = 8): DataFrame = {
+    // (Not persistInput with a shuffle_hash hint: that drops the hops'
+    // sorts, but the unsorted walk rows measured 1.3% more shuffle bytes.)
     val forest = predTable.select(col("id").as("cur0"), col("pred").as("prev"))
       .repartition(parts, col("cur0")).persist()
     def step(w: DataFrame): DataFrame = w

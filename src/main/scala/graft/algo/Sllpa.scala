@@ -49,26 +49,9 @@ object Sllpa {
     // aggregations), not driver actions, and the 5-deep fused plan pays
     // ~2x first-run codegen. One action per round stays.
     val loop = GraphOps.withShuffleWidth(spark, parts) {
-      SuperstepLoop.run(init, LoopConfig(maxIterations)) { (state, iter) =>
-        // speaker: uniform index into memory = frequency-proportional draw
-        val spoken = state
-          .select(col("id").as("src"),
-            element_at(col("memory"),
-              (pmod(xxhash64(col("id"), lit(iter), lit(seed)),
-                    size(col("memory"))) + 1).cast("int")).as("label"))
-          .join(edges, "src")
-          .select(col("dst").as("id"), col("label"))
-        // listener: most frequent heard label, ties -> smallest label
-        val heard = spoken.groupBy("id", "label").agg(count(lit(1)).as("cnt"))
-          .groupBy("id").agg(min(struct(-col("cnt"), col("label"))).as("pick"))
-          .select(col("id"), col("pick.label").as("accepted"))
-        state.select("id", "memory").join(heard, Seq("id"), "left")
-          .select(col("id"),
-            when(col("accepted").isNull, col("memory"))
-              .otherwise(concat(col("memory"), array(col("accepted")))).as("memory"),
-            lit(true).as(SuperstepLoop.ActiveCol))
-      }
+      SuperstepLoop.run(init, LoopConfig(maxIterations))(step(edges, seed))
     }
+    edges.unpersist(false)
 
     // post-process: labels with frequency >= threshold over the memory size
     val exploded = loop.state
@@ -79,6 +62,35 @@ object Sllpa {
       .filter(col("cnt") >= col("m") * lit(minAssociationStrength))
       .groupBy("id").agg(sort_array(collect_list("label")).as("communityIds"))
     Result(communities, loop.ranIterations)
+  }
+
+  /** One round over `state` (id, memory, _active): every vertex [[speak]]s,
+    * and each listener appends the label it heard most often (ties to the
+    * smallest label). The two-level vote (count per label, then the argmax)
+    * needs the (id, label) pairs, so it groups on its own instead of
+    * through [[SuperstepLoop.gather]]. */
+  private[graft] def step(edges: DataFrame, seed: Long)(state: DataFrame, iter: Int): DataFrame = {
+    val heard = speak(edges, seed)(state, iter)
+      .groupBy("id", "label").agg(count(lit(1)).as("cnt"))
+      .groupBy("id").agg(min(struct(-col("cnt"), col("label"))).as("pick"))
+      .select(col("id"), col("pick.label").as("accepted"))
+    SuperstepLoop.joinBack(state.select("id", "memory"), heard)
+      .select(col("id"),
+        when(col("accepted").isNull, col("memory"))
+          .otherwise(concat(col("memory"), array(col("accepted")))).as("memory"),
+        lit(true).as(SuperstepLoop.ActiveCol))
+  }
+
+  /** The speaker side of a round: every vertex draws one label from its
+    * memory (a uniform index into it is a frequency-proportional draw) and
+    * sends it along the src-partitioned symmetric `edges` through the
+    * superstep kernel's scatter; returns (id = listener, label). */
+  private[graft] def speak(edges: DataFrame, seed: Long)(state: DataFrame, iter: Int): DataFrame = {
+    val speakers = state.select(col("id"),
+      element_at(col("memory"),
+        (pmod(xxhash64(col("id"), lit(iter), lit(seed)), size(col("memory"))) + 1).cast("int"))
+        .as("label"))
+    SuperstepLoop.scatter(speakers, edges).select(col("dst").as("id"), col("label"))
   }
 
   /** Driver-local tail for sub-threshold graphs: the EXACT same rounds —

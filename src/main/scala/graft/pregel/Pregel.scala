@@ -2,7 +2,7 @@ package graft.pregel
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.core.PropertyGraph
+import graft.core.{GraphOps, PropertyGraph}
 
 /** Public vertex-centric Pregel API — the user extension surface of SURVEY
   * §2.6 (reference contract: pregel/src/main/java/org/neo4j/gds/beta/pregel/
@@ -12,8 +12,14 @@ import graft.core.PropertyGraph
   * Spark-first shape: the user supplies COLUMN EXPRESSIONS, not per-vertex
   * closures, so every superstep stays inside whole-stage codegen — a
   * superstep is one (active ⋈ edges) join, one message groupBy with the
-  * user's reducer (map-side combined), and one state join-update. The loop
-  * itself (persistence, plan truncation, lazy superstep fusion, durable
+  * user's reducer (map-side combined), and one state join-update, built on
+  * the superstep kernel ([[SuperstepLoop.scatter]], [[SuperstepLoop.joinBack]]).
+  * The edge table is persisted once per call by the sender side of each
+  * message direction (by `src` for [[sendMsgToDst]], by `dst` for
+  * [[sendMsgToSrc]]), so a superstep streams it past a hash table of the
+  * senders without shuffling or sorting it; a message that reads the
+  * receiver's state adds one hash join on the receiver. The loop itself
+  * (persistence, plan truncation, lazy superstep fusion, durable
   * checkpoint/resume, convergence) is [[SuperstepLoop]].
   *
   * Vote-to-halt follows the reference: every vertex votes to halt after each
@@ -128,82 +134,90 @@ final class Pregel private (graph: PropertyGraph) {
   def run(): DataFrame = {
     require(vertexCols.nonEmpty, "at least one withVertexColumn is required")
     require(msgsToDst.nonEmpty || msgsToSrc.nonEmpty, "at least one sendMsg is required")
-    val agg = reducer.getOrElse(
-      throw new IllegalArgumentException("aggMsgs is required"))
-
-    val edges = graph.edges
-    val stateCols = vertexCols.map(_.name)
-
-    val init = graph.vertices.select(
-      col("id") +: vertexCols.map(v => v.init.as(v.name)) :+
-        lit(true).as(SuperstepLoop.ActiveCol): _*)
-
+    require(reducer.nonEmpty, "aggMsgs is required")
     // superstep shuffles sized to the edge table (session width at scale,
     // data-sized on small graphs — see GraphOps.adaptiveParts)
     val spark = graph.edges.sparkSession
-    val width = graft.core.GraphOps.adaptiveParts(spark, graph.edges.count())
-
-    val result = graft.core.GraphOps.withShuffleWidth(spark, width) {
-      SuperstepLoop.run(init, LoopConfig(
+    val width = GraphOps.adaptiveParts(spark, graph.edges.count())
+    GraphOps.withShuffleWidth(spark, width) {
+      val (bySrc, byDst) = edgeTables(width)
+      val result = SuperstepLoop.run(initState(width), LoopConfig(
         maxSteps = maxIterations, checkpointDir = checkpointDir,
         checkpointInterval = checkpointInterval, fusedSteps = fusedSteps,
-        checkpointKeepLast = checkpointKeepLast)) { (state0, _) =>
-        // masterCompute: one 1-row aggregate over ALL vertices' current state,
-        // broadcast back into the superstep's own plan (no driver round-trip;
-        // chains lazily under fusedSteps like the rest of the step)
-        val masterRow: Option[DataFrame] =
-          if (masterAggs.isEmpty) None
-          else {
-            val aggs = masterAggs.map { case (n, a) => a.as(s"_pregel_master_$n") }
-            Some(state0.agg(aggs.head, aggs.tail: _*))
-          }
-        val state = masterRow.fold(state0)(r => state0.crossJoin(broadcast(r)))
-        // Sender must be active (classic Pregel: halted vertices don't compute).
-        // The sender of a dst-bound message is the edge's src and vice versa,
-        // so each direction filters activity on its own endpoint.
-        def endpoint(side: String, activeOnly: Boolean): DataFrame = {
-          val base = if (activeOnly) state.filter(col(SuperstepLoop.ActiveCol)) else state
-          base.select(col("id").as(s"__${side}_id"),
-            struct(stateCols.map(col): _*).as(s"_pregel_$side"))
-        }
-        // One DataFrame per declared message; the union below is free (no
-        // shuffle happens until the reducer's groupBy).
-        def msgsFor(msgs: Seq[Column], toCol: String, senderSide: String,
-                    otherSide: String): Seq[DataFrame] =
-          msgs.map { m =>
-            var t = edges.join(endpoint(senderSide, activeOnly = true),
-              col(senderSide) === col(s"__${senderSide}_id"))
-            // the non-sender endpoint's state joins in only if referenced —
-            // sender-only messages keep a superstep at ONE state-edges join
-            if (references(msgs, s"_pregel_$otherSide."))
-              t = t.join(endpoint(otherSide, activeOnly = false),
-                col(otherSide) === col(s"__${otherSide}_id"))
-            // master values join into the message frame only if referenced
-            masterRow.foreach { r =>
-              if (references(msgs, "_pregel_master_")) t = t.crossJoin(broadcast(r))
-            }
-            t.select(col(toCol).as("id"), m.as("_pregel_msg"))
-              .filter(col("_pregel_msg").isNotNull)
-          }
-
-        val allMsgs = msgsFor(msgsToDst, "dst", "src", "dst") ++
-          msgsFor(msgsToSrc, "src", "dst", "src")
-        val reduced = allMsgs.reduce(_ unionByName _)
-          .groupBy("id").agg(agg.as("_pregel_msg"))
-
-        val joined = state.join(reduced, Seq("id"), "left")
-        val received = col("_pregel_msg").isNotNull
-        val updated = vertexCols.map(v =>
-          when(received, v.afterMsg).otherwise(col(v.name)).as(v.name))
-        // halt predicate sees the UPDATED columns: evaluate via a two-step select
-        joined.select(col("id") +: updated :+ col("_pregel_msg"): _*)
-          .select(col("id") +: stateCols.map(col) :+ (haltCond match {
-            case Some(h) => col("_pregel_msg").isNotNull && !coalesce(h, lit(false))
-            case None    => col("_pregel_msg").isNotNull
-          }).as(SuperstepLoop.ActiveCol): _*)
-      }
+        checkpointKeepLast = checkpointKeepLast))((state, _) => step(bySrc, byDst)(state))
+      (bySrc ++ byDst).foreach(_.unpersist(false))
+      result.state.select(col("id") +: vertexCols.map(v => col(v.name)): _*)
     }
-    result.state.select(col("id") +: stateCols.map(col): _*)
+  }
+
+  /** The edge table persisted by the sender side of each declared direction:
+    * by `src` for [[sendMsgToDst]], by `dst` for [[sendMsgToSrc]]. */
+  private[graft] def edgeTables(width: Int): (Option[DataFrame], Option[DataFrame]) = (
+    Option.when(msgsToDst.nonEmpty)(SuperstepLoop.persistInput(graph.edges, width, "src")),
+    Option.when(msgsToSrc.nonEmpty)(SuperstepLoop.persistInput(graph.edges, width, "dst")))
+
+  /** (id, state columns, _active), partitioned by id after the projection. */
+  private[graft] def initState(width: Int): DataFrame =
+    graph.vertices.select(col("id") +: vertexCols.map(v => v.init.as(v.name)) :+
+        lit(true).as(SuperstepLoop.ActiveCol): _*)
+      .repartition(width, col("id"))
+
+  /** One superstep over the id-partitioned `state0`: every active vertex
+    * sends its messages through the superstep kernel's scatter along the
+    * edge tables of [[edgeTables]], the messages are reduced per receiver
+    * (one exchange), and the receivers update their columns. */
+  private[graft] def step(bySrc: Option[DataFrame], byDst: Option[DataFrame])
+                         (state0: DataFrame): DataFrame = {
+    val stateCols = vertexCols.map(_.name)
+    // masterCompute: one 1-row aggregate over ALL vertices' current state,
+    // broadcast back into the superstep's own plan (no driver round-trip;
+    // chains lazily under fusedSteps like the rest of the step)
+    val masterRow: Option[DataFrame] =
+      if (masterAggs.isEmpty) None
+      else {
+        val aggs = masterAggs.map { case (n, a) => a.as(s"_pregel_master_$n") }
+        Some(state0.agg(aggs.head, aggs.tail: _*))
+      }
+    val state = masterRow.fold(state0)(r => state0.crossJoin(broadcast(r)))
+    // an endpoint's state as a message row reads it: Pregel.src / Pregel.dst
+    def endpoint(side: String, of: DataFrame): DataFrame =
+      of.select(col("id"), struct(stateCols.map(col): _*).as(s"_pregel_$side"))
+    // Messages along `edges` (persisted by the sender side `from`) to `to`.
+    // Sender must be active (classic Pregel: halted vertices don't compute).
+    // One DataFrame per declared message; the union below is free (no
+    // shuffle happens until the reducer's groupBy).
+    def messages(msgs: Seq[Column], edges: Option[DataFrame], from: String,
+                 to: String): Seq[DataFrame] =
+      edges.toSeq.flatMap { e =>
+        var rows = SuperstepLoop.scatter(
+          endpoint(from, state.filter(col(SuperstepLoop.ActiveCol))), e, from)
+        // the receiver's state joins in only if referenced — sender-only
+        // messages keep a superstep at ONE state-edges join
+        if (references(msgs, s"_pregel_$to."))
+          rows = SuperstepLoop.joinBack(rows, endpoint(to, state), key = to)
+        // master values join into the message frame only if referenced
+        masterRow.foreach { r =>
+          if (references(msgs, "_pregel_master_")) rows = rows.crossJoin(broadcast(r))
+        }
+        msgs.map(m => rows.select(col(to).as("id"), m.as("_pregel_msg"))
+          .filter(col("_pregel_msg").isNotNull))
+      }
+
+    val reduced = (messages(msgsToDst, bySrc, "src", "dst") ++
+        messages(msgsToSrc, byDst, "dst", "src"))
+      .reduce(_ unionByName _)
+      .groupBy("id").agg(reducer.get.as("_pregel_msg"))
+
+    val received = col("_pregel_msg").isNotNull
+    val updated = vertexCols.map(v =>
+      when(received, v.afterMsg).otherwise(col(v.name)).as(v.name))
+    // halt predicate sees the UPDATED columns: evaluate via a two-step select
+    SuperstepLoop.joinBack(state, reduced)
+      .select(col("id") +: updated :+ col("_pregel_msg"): _*)
+      .select(col("id") +: stateCols.map(col) :+ (haltCond match {
+        case Some(h) => col("_pregel_msg").isNotNull && !coalesce(h, lit(false))
+        case None    => col("_pregel_msg").isNotNull
+      }).as(SuperstepLoop.ActiveCol): _*)
   }
 }
 

@@ -157,7 +157,8 @@ object SuperstepLoop {
     *    size (it needs size < threshold × shuffle partitions), so every
     *    unhinted join is a sort-merge join. Step bodies that must not sort
     *    the edge table every superstep hint `shuffle_hash` on their V-row
-    *    side (PageRank.step, LabelPropagation.syncStep, [[relax]]).
+    *    side (PageRank.step, LabelPropagation.syncStep and the [[gather]]
+    *    kernel).
     */
   private[graft] def withIterationConf[A](spark: SparkSession)(body: => A): A =
     withConf(spark, Seq(AqeKey -> "false", "spark.sql.autoBroadcastJoinThreshold" -> "-1"))(body)
@@ -195,36 +196,49 @@ object SuperstepLoop {
     withConf(df.sparkSession, Seq(AqeKey -> "false"))(input.persist())
   }
 
-  /** One monotone-relaxation superstep: every active vertex sends
-    * `cand` (an expression over its `value` and the edge row) along `edges`,
-    * which [[persistInput]] holds partitioned by `from`; each `to` endpoint
-    * keeps the min (`min = true`) or max of its `value` and its best
-    * candidate, and is active next superstep iff that improved it. Other
-    * state columns pass through in place.
-    *
-    * `state` (id, value, …, `_active`) is id-partitioned at the edges'
-    * width. Both joins build their hash table on the V-row side (the active
-    * frontier, then the per-vertex best candidate), so the edge table is
-    * never sorted, and the superstep's only exchange is the aggregate's,
-    * which map-side combines. This is the update rule of hash-min WCC,
-    * BFS, SSSP (Dijkstra's distance phase), A* and SCC's coloring and
-    * backward-reach fixpoints. (States whose build side is not V-sized,
-    * such as the source × vertex distances of all-pairs shortest paths and
-    * influence maximization, keep their own steps.) */
+  /** Scatter: `senders` (`id` and the payload the messages read), the
+    * caller's id-partitioned projection of the state, joined onto `edges`,
+    * which [[persistInput]] holds partitioned by `from`. The hash table is
+    * built on the V-row senders, so the E-row edge table streams past it
+    * unsorted and unshuffled. The rows keep `from` (the sender id), the
+    * payload and every edge column. */
+  private[graft] def scatter(senders: DataFrame, edges: DataFrame, from: String = "src"): DataFrame =
+    senders.withColumnRenamed("id", from).hint("shuffle_hash").join(edges, from)
+
+  /** The superstep kernel: [[scatter]], then `msg` to each edge's `to`
+    * endpoint as `id`, reduced per receiver by the aggregate `reduce` (map-side
+    * combined, so the superstep's only exchange carries one partial row per
+    * receiver and map task). `msg` and `reduce` carry the caller's aliases.
+    * The result is id-partitioned like the state, for [[joinBack]]. */
+  private[graft] def gather(senders: DataFrame, edges: DataFrame, msg: Column, reduce: Column,
+                            from: String = "src", to: String = "dst"): DataFrame =
+    scatter(senders, edges, from).select(col(to).as("id"), msg).groupBy("id").agg(reduce)
+
+  /** `rows` left-joined on `key` with the V-row frame `byId` (`id`, …),
+    * whose `id` is renamed to `key`; the hash table is built on `byId`, so
+    * `rows` is never sorted. With `rows` the state and `byId` a [[gather]]
+    * result this is a superstep's join-back (no exchange: both sides are
+    * id-partitioned); with `rows` scattered edge rows it looks up the state
+    * of each row's receiver. */
+  private[graft] def joinBack(rows: DataFrame, byId: DataFrame, key: String = "id"): DataFrame =
+    rows.join((if (key == "id") byId else byId.withColumnRenamed("id", key)).hint("shuffle_hash"),
+      Seq(key), "left")
+
+  /** One monotone-relaxation superstep on the kernel: every active vertex
+    * sends `cand` (an expression over its `value` and the edge row) along
+    * `edges`; each `to` endpoint keeps the min (`min = true`) or max of its
+    * `value` and its best candidate, and is active next superstep iff that
+    * improved it. Other state columns pass through in place. This is the
+    * update rule of hash-min WCC, BFS, SSSP (Dijkstra's distance phase), A*
+    * and SCC's coloring and backward-reach fixpoints. */
   private[graft] def relax(state: DataFrame, edges: DataFrame, value: String, cand: Column,
                            min: Boolean, from: String = "src", to: String = "dst"): DataFrame = {
-    val candidates = state
-      .filter(col(ActiveCol))
-      .select(col("id").as(from), col(value))
-      .hint("shuffle_hash")
-      .join(edges, from)
-      .select(col(to).as("id"), cand.as("_cand"))
-      .groupBy("id").agg((if (min) functions.min("_cand") else max("_cand")).as("_cand"))
+    val candidates = gather(state.filter(col(ActiveCol)).select(col("id"), col(value)), edges,
+      cand.as("_cand"), (if (min) functions.min("_cand") else max("_cand")).as("_cand"), from, to)
     val (better, best) =
       if (min) (col("_cand") < col(value), least(col(value), col("_cand")))
       else (col("_cand") > col(value), greatest(col(value), col("_cand")))
-    state.select(state.columns.filter(_ != ActiveCol).map(col): _*)
-      .join(candidates.hint("shuffle_hash"), Seq("id"), "left")
+    joinBack(state.select(state.columns.filter(_ != ActiveCol).map(col): _*), candidates)
       .select(state.columns.toSeq.map {
         case ActiveCol => coalesce(better, lit(false)).as(ActiveCol)
         case `value`   => best.as(value)

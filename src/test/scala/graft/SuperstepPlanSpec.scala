@@ -1,21 +1,24 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, GraftSqlCompat}
+import org.apache.spark.sql.{DataFrame, GraftSqlCompat, GraftTestAccess}
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{LeafExecNode, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.algo.{LabelPropagation, LpConfig, PageRank, PageRankConfig, Paths, Schedule, Wcc}
+import graft.algo.{Eigenvector, Hits, HitsConfig, LabelPropagation, LpConfig, PageRank,
+  PageRankConfig, Paths, Schedule, Sllpa, Wcc}
 import graft.core.{GraphOps, Orientation, PropertyGraph}
 import graft.io.SnapshotStore
-import graft.pregel.{LoopConfig, SuperstepLoop}
+import graft.pregel.{LoopConfig, Pregel, SuperstepLoop}
 
-/** Physical shape of superstep 1 of PageRank, WCC, LP and the
-  * [[SuperstepLoop.relax]] kernel, built the way `run` builds it: the edge inputs and the initial state come from the
+/** Physical shape of superstep 1 of PageRank, WCC, LP, the
+  * [[SuperstepLoop.relax]] kernel and the other users of the
+  * [[SuperstepLoop.gather]] kernel (Eigenvector, HITS, Pregel, the SLPA
+  * speaker), built the way `run` builds it: the edge inputs and the initial state come from the
   * algorithms' own builders, set up with adaptive execution ON (a default
   * session) and never warmed by an action, and the state is persisted and
   * plan-truncated under the loop's conf, as the loop hands it to a step.
@@ -71,6 +74,22 @@ class SuperstepPlanSpec extends AnyFunSuite with SparkTestBase {
     assert(smj.isEmpty, s"$name superstep sorts for a join:\n$plan")
     assert(exchanges.size == 1,
       s"$name superstep has ${exchanges.size} exchanges, expected 1:\n$plan")
+  }
+
+  /** A kernel user's superstep: nothing sorts, and no input (the persisted
+    * edge table or the plan-truncated state) is shuffled on its way into a
+    * join; the aggregate's exchange sits above the joins. */
+  private def assertKernelShape(name: String, plan: SparkPlan): Unit = {
+    def reachesInput(p: SparkPlan): Boolean = p match {
+      case _: LeafExecNode => true
+      case _: BaseJoinExec => false
+      case other           => other.children.exists(reachesInput)
+    }
+    assert(plan.collect { case j: SortMergeJoinExec => j }.isEmpty,
+      s"$name superstep sorts for a join:\n$plan")
+    assert(plan.collect { case so: SortExec => so }.isEmpty, s"$name superstep sorts:\n$plan")
+    assert(plan.collect { case e: ShuffleExchangeExec if reachesInput(e.child) => e }.isEmpty,
+      s"$name superstep shuffles an input before a join:\n$plan")
   }
 
   private def pageRankEdges: DataFrame = {
@@ -178,5 +197,86 @@ class SuperstepPlanSpec extends AnyFunSuite with SparkTestBase {
       assert(input.count() == edgeList.size)
       input.unpersist(false)
     }
+  }
+
+  test("Eigenvector superstep: kernel gather, no sort, edges not shuffled") {
+    val (msgEdges, (cached, state)) = adaptive {
+      (SuperstepLoop.persistInput(edges.withColumn("norm", lit(1.0)), parts, "src"),
+       loopState(vertices.repartition(parts, col("id"))
+         .select(col("id"), lit(0.5).as("rank"), lit(1.0).as("next"),
+           lit(true).as(SuperstepLoop.ActiveCol))))
+    }
+    assertIdPartitioned("Eigenvector", state)
+    assertKernelShape("Eigenvector", plannedStep(Eigenvector.step(msgEdges, 0.0)(state)))
+    msgEdges.unpersist(false); cached.unpersist(false)
+  }
+
+  test("HITS half-steps: kernel gathers along src and dst, no sort, edges not shuffled") {
+    val (bySrc, byDst, (cached, state)) = adaptive {
+      (SuperstepLoop.persistInput(edges, parts, "src"),
+       SuperstepLoop.persistInput(edges, parts, "dst"),
+       loopState(vertices.repartition(parts, col("id"))
+         .select(col("id"), lit(1.0).as("hub"), lit(1.0).as("auth"),
+           lit(true).as(SuperstepLoop.ActiveCol))))
+    }
+    assertIdPartitioned("HITS", state)
+    assertKernelShape("HITS auth", plannedStep(Hits.authStep(bySrc)(state)))
+    assertKernelShape("HITS hub", plannedStep(Hits.hubStep(byDst)(state)))
+    bySrc.unpersist(false); byDst.unpersist(false); cached.unpersist(false)
+  }
+
+  /** Superstep 1 of `pregel`, over its own edge tables and initial state. */
+  private def assertPregelStep(name: String, pregel: Pregel): Unit = {
+    val ((bySrc, byDst), (cached, state)) =
+      adaptive((pregel.edgeTables(parts), loopState(pregel.initState(parts))))
+    assertIdPartitioned(name, state)
+    assertKernelShape(name, plannedStep(pregel.step(bySrc, byDst)(state)))
+    (bySrc ++ byDst).foreach(_.unpersist(false)); cached.unpersist(false)
+  }
+
+  test("Pregel sender-only superstep (sendMsgToDst): kernel scatter, no sort, edges not shuffled") {
+    val graph = PropertyGraph(vertices, edges.withColumn("weight", lit(2.0)))
+    assertPregelStep("Pregel SSSP", Pregel(graph)
+      .withVertexColumn("dist", init = when(col("id") === 0L, 0.0),
+        afterMsg = least(coalesce(col("dist"), Pregel.msg), Pregel.msg))
+      .sendMsgToDst(Pregel.src("dist") + Pregel.edge("weight"))
+      .aggMsgs(min(Pregel.msg)))
+  }
+
+  test("Pregel sendMsgToSrc superstep: edges persisted by dst, no sort, not shuffled") {
+    assertPregelStep("Pregel to src", Pregel(PropertyGraph(vertices, edges))
+      .withVertexColumn("label", init = col("id"), afterMsg = least(col("label"), Pregel.msg))
+      .sendMsgToSrc(Pregel.dst("label"))
+      .aggMsgs(min(Pregel.msg)))
+  }
+
+  test("SLPA speaker: kernel scatter, no sort, edges not shuffled") {
+    val (symmetric, (cached, state)) = adaptive {
+      (SuperstepLoop.persistInput(edges.unionByName(edges.select(col("dst").as("src"),
+         col("src").as("dst"))), parts, "src", distinct = true),
+       loopState(vertices
+         .select(col("id"), array(col("id")).as("memory"), lit(true).as(SuperstepLoop.ActiveCol))
+         .repartition(parts, col("id"))))
+    }
+    assertIdPartitioned("SLPA", state)
+    assertKernelShape("SLPA speaker", plannedStep(Sllpa.speak(symmetric, 42L)(state, 1)))
+    symmetric.unpersist(false); cached.unpersist(false)
+  }
+
+  test("Pregel, HITS and Eigenvector unpersist every edge table they persist") {
+    // the loop's final state stays cached for the caller: one entry per call
+    val graph = PropertyGraph(vertices, edges)
+    def newEntries(run: => DataFrame): Int = {
+      val before = GraftTestAccess.cachedEntries(spark)
+      run.count()
+      GraftTestAccess.cachedEntries(spark) - before
+    }
+    assert(newEntries(Pregel(graph)
+      .withVertexColumn("label", init = col("id"), afterMsg = least(col("label"), Pregel.msg))
+      .sendMsgToDst(Pregel.src("label")).sendMsgToSrc(Pregel.dst("label"))
+      .aggMsgs(min(Pregel.msg)).setMaxIterations(3).run()) == 1)
+    assert(newEntries(Hits.run(graph, HitsConfig(maxIterations = 2))) == 1)
+    assert(newEntries(Eigenvector.run(graph,
+      PageRankConfig(maxIterations = 3, tolerance = 0.0)).scores) == 1)
   }
 }

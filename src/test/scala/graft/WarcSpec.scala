@@ -276,4 +276,28 @@ class WarcSpec extends AnyFunSuite with SparkTestBase {
       p.unpersist()
     } finally rm(d)
   }
+
+  test("one-page crawl without links: every north-star algorithm converges, resume reproduces PageRank") {
+    import graft.algo._
+    val (d, ck) = (tmp(), tmp())
+    try {
+      val p = Pages.synth(spark, 1L)
+      Warc.write(p, d)
+      val back = Warc.read(spark, d)
+      assert(back.select("url", "html").collect().toSeq == p.select("url", "html").collect().toSeq)
+      val graph = Pages.toGraph(back)
+      assert(graph.edges.count() == 0L)
+      val cfg = PageRankConfig(maxIterations = 10, checkpointDir = Some(ck))
+      val pr = PageRank.run(graph, cfg)
+      assert(pr.didConverge)
+      val scores = collectMap(pr.scores, "id", "score")
+      assert(scores.size == 1)
+      assert(collectMap(PageRank.resume(graph, cfg).scores, "id", "score") == scores)
+      val wcc = Wcc.run(graph)
+      assert(wcc.didConverge && wcc.components.count() == 1L)
+      val lp = LabelPropagation.run(graph, LpConfig(maxIterations = 5, schedule = Schedule.Sync))
+      assert(lp.didConverge && lp.labels.count() == 1L)
+      assert(TriangleCount.run(graph).globalTriangles == 0L)
+    } finally { rm(d); rm(ck) }
+  }
 }
