@@ -31,18 +31,20 @@ object Eigenvector {
       GraphOps.adaptiveParts(spark, graph.edges.count()))
     GraphOps.withShuffleWidth(spark, parts) {
 
-    val vertices  = graph.vertices.select("id")
+    val vertices  = graph.vertexIds(parts)
     val nodeCount = vertices.count()
-    val edgesW    = GraphOps.withWeight(graph.edges)
+    val edgesW    = graph.outEdges(parts)
 
-    // Weighted: message = next * weight / weightedDegree(src); unweighted: next.
-    val msgEdges = SuperstepLoop.persistInput(if (cfg.weighted) {
-      val wdeg = edgesW.groupBy("src").agg(sum("weight").as("wdeg"))
-      edgesW.join(wdeg, "src").filter(col("wdeg") > 0.0)
-        .select(col("src"), col("dst"), (col("weight") / col("wdeg")).as("norm"))
-    } else {
-      edgesW.select(col("src"), col("dst"), lit(1.0).as("norm"))
-    }, parts, "src")
+    // Weighted: message = next * weight / weightedDegree(src); unweighted:
+    // next, straight off the graph's src-partitioned projection. The
+    // weighted table joins a degree aggregate, so it is persisted once (its
+    // repartition is elided: both join sides are src-partitioned).
+    val msgEdges =
+      if (cfg.weighted) {
+        val wdeg = edgesW.groupBy("src").agg(sum("weight").as("wdeg"))
+        SuperstepLoop.persistInput(edgesW.join(wdeg, "src").filter(col("wdeg") > 0.0)
+          .select(col("src"), col("dst"), (col("weight") / col("wdeg")).as("norm")), parts, "src")
+      } else edgesW.select(col("src"), col("dst"), lit(1.0).as("norm"))
 
     val initValue =
       if (cfg.sourceNodes.isEmpty) 1.0 / nodeCount else 1.0 / cfg.sourceNodes.size
@@ -52,8 +54,7 @@ object Eigenvector {
 
     // state_0 = after superstep 0 + master step: rank normalized, next raw.
     // (one-time driver scalar — NOT per superstep)
-    val init0 = vertices.repartition(parts, col("id"))
-      .select(col("id"), initCol.as("next"))
+    val init0 = vertices.select(col("id"), initCol.as("next"))
     val l2init = init0.agg(sqrt(sum(col("next") * col("next")))).first().getDouble(0)
     val init = init0.select(col("id"),
         (col("next") / lit(if (l2init == 0.0) 1.0 else l2init)).as("rank"),
@@ -67,7 +68,7 @@ object Eigenvector {
     val loopCfg = LoopConfig(cfg.maxIterations - 1, cfg.checkpointDir, cfg.checkpointInterval,
       fusedSteps = cfg.fusedSteps)
     val result = SuperstepLoop.run(init, loopCfg)((state, _) => step(msgEdges, cfg.tolerance)(state))
-    msgEdges.unpersist(false)
+    if (cfg.weighted) msgEdges.unpersist(false)
 
     val scores = Scaler.apply(cfg.scaler,
       result.state.select(col("id"), col("rank").as("score")), "score")

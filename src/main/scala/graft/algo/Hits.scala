@@ -46,15 +46,14 @@ object Hits {
     val parts = cfg.numPartitions.getOrElse(
       GraphOps.adaptiveParts(spark, graph.edges.count()))
     GraphOps.withShuffleWidth(spark, parts) {
-    // Two persisted orientations: the auth step joins on src, the hub step
-    // on dst — co-partitioned joins both ways instead of re-shuffling the
-    // edge table every half-iteration (the 100-TB shape: edge storage is
-    // cheap next to 20x2 repeated shuffles of it).
-    val edges = SuperstepLoop.persistInput(graph.edges.select("src", "dst"), parts, "src")
-    val edgesByDst = SuperstepLoop.persistInput(graph.edges.select("src", "dst"), parts, "dst")
+    // Both of the graph's edge projections: the auth step joins on src, the
+    // hub step on dst — co-partitioned joins both ways instead of
+    // re-shuffling the edge table every half-iteration (the 100-TB shape:
+    // edge storage is cheap next to 20x2 repeated shuffles of it).
+    val edges = graph.outEdges(parts).select("src", "dst")
+    val edgesByDst = graph.inEdges(parts).select("src", "dst")
 
-    val init = graph.vertices.select("id")
-      .repartition(parts, col("id"))
+    val init = graph.vertexIds(parts)
       .select(col("id"), lit(1.0).as("hub"), lit(1.0).as("auth"),
         lit(true).as(SuperstepLoop.ActiveCol))
 
@@ -72,8 +71,6 @@ object Hits {
               lit(true).as(SuperstepLoop.ActiveCol))
         } else next
     }
-    edges.unpersist(false)
-    edgesByDst.unpersist(false)
     // Final normalization: two scalars off the loop's cached state (one tiny
     // job), embedded as literals — no broadcast subquery needed.
     val norms = result.state.agg(

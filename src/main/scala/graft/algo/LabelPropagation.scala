@@ -153,31 +153,41 @@ object LabelPropagation {
     val parts = cfg.numPartitions.getOrElse(
       GraphOps.adaptiveParts(spark, graph.edges.count()))
 
-    val edges = voteEdges(weightedEdges(graph, cfg), parts)
-    val init = initState(graph.vertices, cfg, parts)
+    val edges = voteEdges(graph, cfg, parts)
+    val seeded = cfg.seedProperty.exists(graph.vertices.columns.contains)
+    val init = initState(
+      if (seeded) graph.vertices.repartition(parts, col("id")) else graph.vertexIds(parts), cfg)
 
     val loopCfg = LoopConfig(cfg.maxIterations, cfg.checkpointDir, cfg.checkpointInterval)
     val result = GraphOps.withShuffleWidth(spark, parts) {
       SuperstepLoop.run(init, loopCfg)(syncStep(edges, cfg.schedule, parts))
     }
-    edges.unpersist(false)
+    if (nodeWeighted(graph, cfg)) edges.unpersist(false)
     LpResult(result.state.select("id", "label"), result.ranIterations, result.didConverge)
   }
 
-  /** The weighted (src, dst, weight) vote edges, persisted and partitioned
-    * by dst: each iteration joins them to the state on dst with no exchange. */
+  private def nodeWeighted(graph: PropertyGraph, cfg: LpConfig): Boolean =
+    cfg.nodeWeightProperty.exists(graph.vertices.columns.contains)
+
+  /** The vote edges of `graph`: its dst-partitioned projection
+    * [[PropertyGraph.inEdges]] itself, unless a node weight rescales the
+    * votes into a table of their own (which the caller frees). */
+  private[graft] def voteEdges(graph: PropertyGraph, cfg: LpConfig, parts: Int): DataFrame =
+    if (nodeWeighted(graph, cfg)) voteEdges(weightedEdges(graph, cfg), parts)
+    else graph.inEdges(parts)
+
+  /** The node-weighted (src, dst, weight) vote edges, persisted and
+    * partitioned by dst like [[PropertyGraph.inEdges]]: each iteration joins
+    * them to the state on dst with no exchange. */
   private[graft] def voteEdges(weighted: DataFrame, parts: Int): DataFrame =
     SuperstepLoop.persistInput(weighted, parts, "dst")
 
-  /** Initial state (id, label, _active), partitioned by id AFTER the
-    * projection: with no seed property `label` is `id AS label`, and an
-    * id-partitioned child would leave a partitioning that plan truncation
-    * reads as `hashpartitioning(label)`. */
-  private[graft] def initState(vertices: DataFrame, cfg: LpConfig, parts: Int): DataFrame =
-    vertices
-      .select(col("id"), initLabelCol(vertices, cfg).as("label"),
-              lit(true).as(SuperstepLoop.ActiveCol))
-      .repartition(parts, col("id"))
+  /** Initial state (id, label, _active) over `vertices`, which are
+    * hash-partitioned by id (the graph's [[PropertyGraph.vertexIds]], or the
+    * vertex table repartitioned when a seed property is read). */
+  private[graft] def initState(vertices: DataFrame, cfg: LpConfig): DataFrame =
+    vertices.select(col("id"), initLabelCol(vertices, cfg).as("label"),
+      lit(true).as(SuperstepLoop.ActiveCol))
 
   /** One Sync/FullSync iteration over `state` (id, label, _active),
     * hash-partitioned by id into `parts` like the dst-partitioned `edges`.

@@ -94,8 +94,41 @@ object PageRank {
     val parts = cfg.numPartitions.getOrElse(
       GraphOps.adaptiveParts(spark, graph.edges.count()))
     GraphOps.withShuffleWidth(spark, parts) {
-    val vertices = graph.vertices.select("id")
-    val edgesW   = GraphOps.withWeight(graph.edges)
+    val (augEdges, hubPath, deltaCoefficient) = inputs(graph, cfg, parts, articleRank)
+    val init = initState(augEdges, cfg)
+
+    val loopCfg = LoopConfig(
+      maxSteps = cfg.maxIterations - 1,
+      checkpointDir = cfg.checkpointDir,
+      checkpointInterval = cfg.checkpointInterval,
+      fusedSteps = cfg.fusedSteps)
+
+    val stepFn = step(augEdges, hubPath, cfg, deltaCoefficient) _
+    val result =
+      if (resumeRun) SuperstepLoop.resume(spark, init, loopCfg)(stepFn)
+      else SuperstepLoop.run(init, loopCfg)(stepFn)
+
+    augEdges.unpersist(false)
+    hubPath.foreach { case (ids, es) => ids.unpersist(false); es.unpersist(false) }
+    val scores = Scaler.apply(cfg.scaler,
+      result.state.select(col("id"), col("rank").as("score")), "score")
+    PageRankResult(
+      scores,
+      if (result.didConverge) result.ranIterations else cfg.maxIterations,
+      result.didConverge)
+    }
+  }
+
+  /** The superstep input of a run over `graph` at width `parts`: the
+    * persisted `augEdges` (see [[augmentedEdges]]), the hub path and the
+    * delta coefficient. Each is read from the graph's src-partitioned
+    * projections, so only the hub path's dst-partitioned table plans an
+    * exchange. */
+  private[graft] def inputs(graph: PropertyGraph, cfg: PageRankConfig, parts: Int,
+                            articleRank: Boolean)
+      : (DataFrame, Option[(DataFrame, DataFrame)], Double) = {
+    val vertices = graph.vertexIds(parts)
+    val edgesW   = graph.outEdges(parts)
 
     // Out-degree per source (weighted = sum of weights), computed once.
     val degCol  = if (cfg.weighted) sum(col("weight")) else count(lit(1)).cast("double")
@@ -130,40 +163,23 @@ object PageRank {
       case None => (normEdges, None)
     }
 
-    val augEdges = augmentedEdges(mainNormEdges, vertices, parts)
-    val init = initState(augEdges, cfg)
-
-    val loopCfg = LoopConfig(
-      maxSteps = cfg.maxIterations - 1,
-      checkpointDir = cfg.checkpointDir,
-      checkpointInterval = cfg.checkpointInterval,
-      fusedSteps = cfg.fusedSteps)
-
-    val stepFn = step(augEdges, hubPath, cfg, deltaCoefficient) _
-    val result =
-      if (resumeRun) SuperstepLoop.resume(spark, init, loopCfg)(stepFn)
-      else SuperstepLoop.run(init, loopCfg)(stepFn)
-
-    augEdges.unpersist(false)
-    hubPath.foreach { case (ids, es) => ids.unpersist(false); es.unpersist(false) }
-    val scores = Scaler.apply(cfg.scaler,
-      result.state.select(col("id"), col("rank").as("score")), "score")
-    PageRankResult(
-      scores,
-      if (result.didConverge) result.ranIterations else cfg.maxIterations,
-      result.didConverge)
-    }
+    (augmentedEdges(mainNormEdges, vertices, parts), hubPath, deltaCoefficient)
   }
 
   /** One persisted, src-partitioned table carrying BOTH the real messages
     * (norm != null) and the per-node self-loop carrier rows (norm == null);
     * the carrier row is what moves a node's own rank through the single
-    * superstep aggregation. */
+    * superstep aggregation. A carrier row's `dst` is null, not its `src`:
+    * `id AS src, id AS dst` would report two partitionings, the union
+    * would then report none, and its repartition would shuffle every row.
+    * With the src-partitioned `normEdges` and the id-partitioned
+    * `vertices` of the graph's projections, both sides report
+    * `hashpartitioning(src)` and the repartition is elided. */
   private[graft] def augmentedEdges(normEdges: DataFrame, vertices: DataFrame,
                                     parts: Int): DataFrame =
     SuperstepLoop.persistInput(
       normEdges.select(col("src"), col("dst"), col("norm"))
-        .unionByName(vertices.select(col("id").as("src"), col("id").as("dst"),
+        .unionByName(vertices.select(col("id").as("src"), lit(null).cast("long").as("dst"),
           lit(null).cast("double").as("norm"))),
       parts, "src")
 
@@ -192,13 +208,13 @@ object PageRank {
                           cfg: PageRankConfig, deltaCoefficient: Double)
                          (state: DataFrame, iter: Int): DataFrame = {
     val lambda = cfg.dampingFactor * deltaCoefficient
-    // Single pass over the augmented edge table: carrier rows (norm null)
-    // transport the node's own rank; message rows send delta*norm while the
-    // source is active. Inactive sources still flow their carrier. The
-    // V-row state is the hash-join build side, so the E-row edge table only
+    // Single pass over the augmented edge table: carrier rows (norm and
+    // dst null) transport the node's own rank back to it; message rows
+    // send delta*norm while the source is active. Inactive sources still
+    // flow their carrier. The V-row state is the hash-join build side, so the E-row edge table only
     // streams past it and is never sorted.
     val mainFlow = state.hint("shuffle_hash").join(augEdges, col("id") === col("src"))
-      .select(col("dst"),
+      .select(coalesce(col("dst"), col("src")).as("dst"),
         when(col("norm").isNull, col("rank")).as("carrier"),
         when(col("norm").isNotNull && col(SuperstepLoop.ActiveCol),
           col("delta") * col("norm")).as("msg"))

@@ -28,11 +28,9 @@ object Paths {
     // per-level joins stay co-partitioned
     val parts = GraphOps.adaptiveParts(spark, graph.edges.count())
     GraphOps.withShuffleWidth(spark, parts) {
-    val edges = SuperstepLoop.persistInput(
-      graph.orientedEdges(orientation).select("src", "dst"), parts, "src")
-    val levels = relaxFrom(graph.vertices, edges, source, 0L, Long.MaxValue,
-      col("dist") + 1L, maxDepth, parts)
-    edges.unpersist(false)
+    val edges = graph.edgesBySrc(orientation, parts).select("src", "dst")
+    val levels = relaxFrom(graph.vertexIds(parts), edges, source, 0L, Long.MaxValue,
+      col("dist") + 1L, maxDepth)
     levels.filter(col("dist") =!= Long.MaxValue).select("id", "dist")
     }
   }
@@ -48,41 +46,31 @@ object Paths {
     val spark = graph.edges.sparkSession
     val parts = GraphOps.adaptiveParts(spark, graph.edges.count())
     GraphOps.withShuffleWidth(spark, parts) {
-    val edges = weightedEdges(graph, orientation, parts)
-    val dists = distances(graph.vertices, edges, source, maxRounds, parts)
-    edges.unpersist(false)
-    dists
+    distances(graph.vertexIds(parts), graph.edgesBySrc(orientation, parts), source, maxRounds)
     }
   }
 
-  /** (src, dst, weight) of `graph` in `orientation`, persisted by src for
-    * [[distances]]. */
-  private[graft] def weightedEdges(graph: PropertyGraph, orientation: Orientation,
-                                   parts: Int): DataFrame =
-    SuperstepLoop.persistInput(
-      GraphOps.withWeight(graph.orientedEdges(orientation)).select("src", "dst", "weight"),
-      parts, "src")
-
   /** (id, dist) of every vertex reachable from `source` over the
-    * [[weightedEdges]] `edges`; the rows are a read of the loop's cached
-    * final state. Call inside a `parts`-wide shuffle scope. */
+    * src-partitioned (src, dst, weight) `edges` (the graph's
+    * [[PropertyGraph.edgesBySrc]]), starting from the id-partitioned `vertices`;
+    * the rows are a read of the loop's cached final state. Call inside a
+    * shuffle scope at the width of the inputs. */
   private[graft] def distances(vertices: DataFrame, edges: DataFrame, source: Long,
-                               maxRounds: Int, parts: Int): DataFrame = {
+                               maxRounds: Int): DataFrame = {
     val inf = Double.PositiveInfinity
-    relaxFrom(vertices, edges, source, 0.0, inf, col("dist") + col("weight"), maxRounds, parts)
+    relaxFrom(vertices, edges, source, 0.0, inf, col("dist") + col("weight"), maxRounds)
       .filter(!col("dist").isNaN && col("dist") =!= inf)
       .select("id", "dist")
   }
 
-  /** Initial single-source state (id, dist, extra…, _active): `zero` at
-    * `source`, `inf` elsewhere, only the source active; partitioned by id
-    * after the projection. */
+  /** Initial single-source state (id, dist, extra…, _active) over the
+    * id-partitioned `vertices`: `zero` at `source`, `inf` elsewhere, only the
+    * source active. */
   private[graft] def sourceState(vertices: DataFrame, source: Long, zero: Any, inf: Any,
-                                 parts: Int, extra: Column*): DataFrame =
-    vertices
-      .select(Seq(col("id"), when(col("id") === source, lit(zero)).otherwise(lit(inf)).as("dist")) ++
+                                 extra: Column*): DataFrame =
+    vertices.select(
+      Seq(col("id"), when(col("id") === source, lit(zero)).otherwise(lit(inf)).as("dist")) ++
         extra :+ (col("id") === source).as(SuperstepLoop.ActiveCol): _*)
-      .repartition(parts, col("id"))
 
   /** Frontier min-relaxation of `dist` from `source` to fixpoint (at most
     * `maxRounds` supersteps); returns the loop's final state. Min-relaxation
@@ -91,9 +79,8 @@ object Paths {
     * the per-round driver round-trip that dominates latency on
     * small-diameter web graphs. */
   private def relaxFrom(vertices: DataFrame, edges: DataFrame, source: Long,
-                        zero: Any, inf: Any, cand: Column,
-                        maxRounds: Int, parts: Int): DataFrame =
-    SuperstepLoop.run(sourceState(vertices, source, zero, inf, parts),
+                        zero: Any, inf: Any, cand: Column, maxRounds: Int): DataFrame =
+    SuperstepLoop.run(sourceState(vertices, source, zero, inf),
         LoopConfig(maxRounds, fusedSteps = 4)) { (state, _) =>
       SuperstepLoop.relax(state, edges, "dist", cand, min = true)
     }.state

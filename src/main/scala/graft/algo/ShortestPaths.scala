@@ -39,17 +39,16 @@ object ShortestPaths {
       return dijkstraLocal(graph, source, orientation, maxRounds, trackPaths)
     val parts = GraphOps.adaptiveParts(spark, edgeCount)
     GraphOps.withShuffleWidth(spark, parts) {
-    val edges = Paths.weightedEdges(graph, orientation, parts)
+    val edges = graph.edgesBySrc(orientation, parts)
     // Paths.sssp's distance phase; its rows are a read of the loop's cached
     // final state, so the three references below cost no extra action.
-    val dists = Paths.distances(graph.vertices, edges, source, maxRounds, parts)
+    val dists = Paths.distances(graph.vertexIds(parts), edges, source, maxRounds)
 
     val withPred = dists.join(canonicalPreds(dists, edges), Seq("id"), "left")
       .select(col("id"), col("dist"),
         when(col("id") === source, lit(null).cast("long")).otherwise(col("pred")).as("pred"))
       .persist()
     withPred.count()
-    edges.unpersist(false)
     if (!trackPaths) withPred
     else {
       val walk = walkPreds(withPred.select(col("id"), col("pred")),
@@ -302,9 +301,9 @@ object ShortestPaths {
         radius, orientation, maxRounds)
     val parts = GraphOps.adaptiveParts(spark, edgeCount)
     GraphOps.withShuffleWidth(spark, parts) {
-    val edges = Paths.weightedEdges(graph, orientation, parts)
+    val edges = graph.edgesBySrc(orientation, parts)
     val inf = Double.PositiveInfinity
-    val init = Paths.sourceState(graph.vertices, source, 0.0, inf, parts,
+    val init = Paths.sourceState(graph.vertices.repartition(parts, col("id")), source, 0.0, inf,
       haversine(col(latCol).cast("double"), col(lonCol).cast("double"),
         tLat, tLon, radius).as("h"))
 
@@ -328,7 +327,6 @@ object ShortestPaths {
     // predecessor forest over settled nodes, then walk the target's chain
     val preds = canonicalPreds(settled, edges).persist()
     preds.count()
-    edges.unpersist(false)
     val costOpt = settled.filter(col("id") === target).collect()
       .headOption.map(_.getDouble(1))
     // walk the single target chain with the shared batched walk (8 hops per

@@ -2,7 +2,7 @@ package graft.algo
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.core.{GraphOps, Orientation, PropertyGraph}
+import graft.core.{GraphOps, PropertyGraph}
 import graft.pregel.{LoopConfig, SuperstepLoop}
 
 /** Speaker-Listener Label Propagation (SLPA) — overlapping communities.
@@ -35,14 +35,13 @@ object Sllpa {
       return runLocal(graph, maxIterations, minAssociationStrength, seed)
     val parts = GraphOps.adaptiveParts(spark, edgeCount)
 
-    val edges = SuperstepLoop.persistInput(graph.orientedEdges(Orientation.Undirected)
-      .select("src", "dst").filter(col("src") =!= col("dst")), parts, "src", distinct = true)
+    // WCC's symmetric, loop-free, deduplicated table, read from the graph's
+    // projections with no exchange
+    val edges = Wcc.undirectedEdges(graph, parts)
     edges.count()
 
-    val init = graph.vertices
-      .select(col("id"), array(col("id")).as("memory"),
-              lit(true).as(SuperstepLoop.ActiveCol))
-      .repartition(parts, col("id"))
+    val init = graph.vertexIds(parts)
+      .select(col("id"), array(col("id")).as("memory"), lit(true).as(SuperstepLoop.ActiveCol))
 
     // NOTE: measured — fusing supersteps (LoopConfig.fusedSteps) does NOT
     // help here: SLPA's cost is its per-round shuffles (speak + two listen

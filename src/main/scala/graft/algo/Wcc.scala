@@ -3,7 +3,7 @@ package graft.algo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.{GraphOps, PropertyGraph}
+import graft.core.{GraphOps, Orientation, PropertyGraph}
 import graft.pregel.{LoopConfig, SuperstepLoop}
 
 /** WCC configuration (reference: algo/src/main/java/org/neo4j/gds/wcc/
@@ -46,8 +46,9 @@ final case class WccResult(components: DataFrame, ranIterations: Int, didConverg
   *
   * Scale shape: only vertices whose component label changed last round send
   * (frontier shrinks geometrically on web graphs); one shuffle per round
-  * (min-aggregation with map-side combine); edges symmetrized once,
-  * partitioned by src and persisted across rounds.
+  * (min-aggregation with map-side combine); edges symmetrized once
+  * from the graph's src- and dst-partitioned projections (no exchange) and
+  * persisted across rounds.
   */
 object Wcc {
 
@@ -59,12 +60,16 @@ object Wcc {
     val parts = cfg.numPartitions.getOrElse(
       GraphOps.adaptiveParts(spark, graph.edges.count()))
 
-    val base = cfg.threshold match {
-      case Some(t) => GraphOps.withWeight(graph.edges).filter(col("weight") > lit(t))
-      case None    => graph.edges
+    val undirected = cfg.threshold match {
+      case Some(t) =>
+        undirectedEdges(GraphOps.withWeight(graph.edges).filter(col("weight") > lit(t)), parts)
+      case None => undirectedEdges(graph, parts)
     }
-    val undirected = undirectedEdges(base, parts)
-    val init = initState(graph.vertices, cfg.seedProperty, parts)
+    val vertices = cfg.seedProperty match {
+      case Some(_) => graph.vertices.repartition(parts, col("id"))
+      case None    => graph.vertexIds(parts)
+    }
+    val init = initState(vertices, cfg.seedProperty)
 
     val loopCfg = LoopConfig(cfg.maxSteps, cfg.checkpointDir, cfg.checkpointInterval,
       fusedSteps = cfg.fusedSteps)
@@ -88,18 +93,24 @@ object Wcc {
         .filter(col("src") =!= col("dst")),
       parts, "src", distinct = true)
 
-  /** Initial hash-min state (id, comp, _active), partitioned by id AFTER the
-    * projection: `id AS comp` over an id-partitioned child would leave a
-    * partitioning that plan truncation reads as `hashpartitioning(comp)`. */
-  private[graft] def initState(vertices: DataFrame, seedProperty: Option[String],
-                               parts: Int): DataFrame = {
+  /** The same table for all of `graph`, read from its projections with no
+    * exchange: both sides of [[PropertyGraph.edgesBySrc]]'s undirected union
+    * are src-partitioned, so the dedup and the repartition reuse that. */
+  private[graft] def undirectedEdges(graph: PropertyGraph, parts: Int): DataFrame =
+    SuperstepLoop.persistInput(
+      graph.edgesBySrc(Orientation.Undirected, parts).select("src", "dst")
+        .filter(col("src") =!= col("dst")),
+      parts, "src", distinct = true)
+
+  /** Initial hash-min state (id, comp, _active) over `vertices`, which are
+    * hash-partitioned by id (the graph's [[PropertyGraph.vertexIds]], or the
+    * vertex table repartitioned when a seed property is read). */
+  private[graft] def initState(vertices: DataFrame, seedProperty: Option[String]): DataFrame = {
     val initComp = seedProperty match {
       case Some(p) => least(col("id"), coalesce(col(p).cast("long"), col("id")))
       case None    => col("id")
     }
-    vertices
-      .select(col("id"), initComp.as("comp"), lit(true).as(SuperstepLoop.ActiveCol))
-      .repartition(parts, col("id"))
+    vertices.select(col("id"), initComp.as("comp"), lit(true).as(SuperstepLoop.ActiveCol))
   }
 
   /** One hash-min superstep over `state` (id, comp, _active), hash-partitioned

@@ -2,6 +2,9 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import graft.pregel.SuperstepLoop
+import scala.collection.mutable
 
 /** Orientation of a relationship projection.
   *
@@ -48,8 +51,75 @@ object EdgeAggregation {
   * Catalyst push filters/prune columns. Node properties are simply columns on
   * `vertices` (the reference stores them as columnar arrays,
   * core/src/main/java/org/neo4j/gds/api/nodeproperties/ValueType.java:29-262).
+  *
+  * The graph also owns its superstep projections, the analogue of the
+  * reference's per-orientation CSR inside a `GraphStore`: [[outEdges]],
+  * [[inEdges]] and [[vertexIds]], each hash-partitioned by its key through
+  * [[graft.pregel.SuperstepLoop.persistInput]] and keyed by partition count.
+  * One is built on first use and reused by every later algorithm call at
+  * that width while it is cached; a call after `spark.catalog.clearCache()`
+  * rebuilds it. Algorithms derive their superstep inputs from these without
+  * an exchange and never unpersist them: the graph does, in [[unpersist]]
+  * (which [[GraphCatalog.drop]] calls). `copy` and [[subgraph]] start with
+  * none. One graph at a time holds cached projections, at one width: a
+  * graph that builds one first frees the set another graph holds, and its
+  * own at any other width, so callers that run algorithms on many
+  * short-lived graphs without `unpersist` do not fill the storage pool.
   */
 final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
+
+  /** This graph's cached projections by (kind, partition count), read and
+    * written under the companion's lock only. */
+  private val projections = mutable.Map.empty[(String, Int), DataFrame]
+
+  private def projection(kind: String, parts: Int)(build: => DataFrame): DataFrame =
+    PropertyGraph.synchronized {
+      projections.get((kind, parts)).filter(_.storageLevel != StorageLevel.NONE).getOrElse {
+        PropertyGraph.claim(projections, parts)
+        val df = build
+        projections((kind, parts)) = df
+        df
+      }
+    }
+
+  private def edgeRows: DataFrame = GraphOps.withWeight(edges).select("src", "dst", "weight")
+
+  /** `(src, dst, weight)` (weight defaulted as [[GraphOps.withWeight]] does),
+    * hash-partitioned by `src` into `parts` and cached. */
+  def outEdges(parts: Int): DataFrame =
+    projection("out", parts)(SuperstepLoop.persistInput(edgeRows, parts, "src"))
+
+  /** The rows of [[outEdges]], hash-partitioned by `dst` into `parts` and cached. */
+  def inEdges(parts: Int): DataFrame =
+    projection("in", parts)(SuperstepLoop.persistInput(edgeRows, parts, "dst"))
+
+  /** The vertex ids, hash-partitioned by `id` into `parts` and cached. */
+  def vertexIds(parts: Int): DataFrame =
+    projection("ids", parts)(SuperstepLoop.persistInput(vertices.select("id"), parts, "id"))
+
+  /** `(src, dst, weight)` under `orientation`, hash-partitioned by `src`
+    * into `parts`, read from the projections with no exchange: REVERSE is
+    * [[inEdges]] with its endpoints swapped, UNDIRECTED is that unioned with
+    * [[outEdges]] (both sides report the same partitioning, so the union
+    * does too). Not cached itself. */
+  def edgesBySrc(orientation: Orientation, parts: Int): DataFrame = {
+    def reversed = inEdges(parts).select(col("dst").as("src"), col("src").as("dst"), col("weight"))
+    orientation match {
+      case Orientation.Natural    => outEdges(parts)
+      case Orientation.Reverse    => reversed
+      case Orientation.Undirected => outEdges(parts).unionByName(reversed)
+    }
+  }
+
+  /** Whether the projected edge rows are `edges` itself, column for column:
+    * no columns besides `src`, `dst` and a non-nullable DOUBLE `weight` (the
+    * projections would read a null weight as the 1.0 default). */
+  private[graft] def plainEdges: Boolean =
+    edges.schema.forall(f => f.name == "src" || f.name == "dst" ||
+      (f.name == "weight" && f.dataType == org.apache.spark.sql.types.DoubleType && !f.nullable))
+
+  /** Frees every projection this graph holds. A later call rebuilds them. */
+  def unpersist(): Unit = PropertyGraph.release(projections)
 
   /** Edge view under the given orientation. UNDIRECTED doubles each edge. */
   def orientedEdges(orientation: Orientation): DataFrame = orientation match {
@@ -93,6 +163,32 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
       .select(edges.columns.map(col): _*) // semi-joins reorder columns
     PropertyGraph(vs, es)
   }
+}
+
+object PropertyGraph {
+
+  private type Held = mutable.Map[(String, Int), DataFrame]
+
+  /** The projection set that holds cache entries, if any. */
+  private var holder: Option[Held] = None
+
+  /** Readies `held` to build a projection at width `parts`: frees the set
+    * another graph holds (first, so a plan the two share is cached again by
+    * the build) and the entries of `held` at any other width. */
+  private def claim(held: Held, parts: Int): Unit = synchronized {
+    holder.filter(_ ne held).foreach(free(_, _ => true))
+    holder = Some(held)
+    free(held, _ != parts)
+  }
+
+  private def release(held: Held): Unit = synchronized {
+    if (holder.exists(_ eq held)) holder = None
+    free(held, _ => true)
+  }
+
+  /** Unpersists and forgets the entries of `held` whose width `drop` selects. */
+  private def free(held: Held, drop: Int => Boolean): Unit =
+    held.keys.filter(k => drop(k._2)).toList.foreach(k => held.remove(k).foreach(_.unpersist(false)))
 }
 
 object GraphOps {
@@ -190,15 +286,20 @@ final class GraphCatalog {
   def create(name: String, graph: PropertyGraph,
              aggregation: EdgeAggregation = EdgeAggregation.None): PropertyGraph = {
     val g = graph.copy(edges = GraphOps.aggregateEdges(graph.edges, aggregation))
-    graphs.put(name, g)
+    put(name, g)
     g
   }
+
+  /** Registers `g` under `name`; a graph it replaces frees its projections. */
+  private def put(name: String, g: PropertyGraph): Unit =
+    graphs.put(name, g).filter(_ ne g).foreach(_.unpersist())
 
   def get(name: String): PropertyGraph =
     graphs.getOrElse(name, throw new NoSuchElementException(s"Graph not in catalog: $name"))
 
   def exists(name: String): Boolean      = graphs.contains(name)
-  def drop(name: String): Boolean        = graphs.remove(name).isDefined
+  /** Removes the graph and frees its projections ([[PropertyGraph.unpersist]]). */
+  def drop(name: String): Boolean        = graphs.remove(name).map(_.unpersist()).isDefined
   def list(): Seq[String]                = graphs.keys.toSeq.sorted
 
   /** `mutate` execution mode: attach an algorithm result as a new vertex
@@ -211,14 +312,14 @@ final class GraphCatalog {
     val r  = result.withColumnRenamed(result.columns.filter(_ != "id").head, property)
     val vs = g.vertices.join(r.select(col("id"), col(property)), Seq("id"), "left")
     val g2 = g.copy(vertices = vs)
-    graphs.put(name, g2)
+    put(name, g2)
     g2
   }
 
   def removeNodeProperty(name: String, property: String): PropertyGraph = {
     val g  = get(name)
     val g2 = g.copy(vertices = g.vertices.drop(property))
-    graphs.put(name, g2)
+    put(name, g2)
     g2
   }
 
@@ -236,7 +337,7 @@ final class GraphCatalog {
     val incoming = result.withColumn("rel_type", lit(relType))
     // unionByName null-fills columns present on only one side
     val g2 = g.copy(edges = existing.unionByName(incoming, allowMissingColumns = true))
-    graphs.put(name, g2)
+    put(name, g2)
     g2
   }
 
@@ -249,7 +350,7 @@ final class GraphCatalog {
       if (!g.edges.columns.contains("rel_type")) g
       else g.copy(edges = g.edges.filter(
         col("rel_type").isNull || col("rel_type") =!= relType))
-    graphs.put(name, g2)
+    put(name, g2)
     g2
   }
 }

@@ -1,6 +1,7 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
@@ -43,7 +44,8 @@ object SnapshotStore {
     // Per-partition file lineage (Iceberg-manifest style): every data file
     // this snapshot owns, with its byte size, recorded alongside the
     // caller's metrics — enough to audit partition balance per iteration
-    // and to resume/validate without listing the directory.
+    // and to resume/validate without listing the directory. The schema
+    // lets [[load]] read the data back without a schema-inference job.
     val listing = Files.list(Paths.get(dataPath))
     val partFiles =
       try listing.iterator().asScala
@@ -52,6 +54,7 @@ object SnapshotStore {
         .toSeq.sorted
       finally listing.close() // Files.list holds a directory FD until closed
     val lineage = Map(
+      "schema"     -> df.schema.json,
       "numFiles"   -> partFiles.size.toString,
       "totalBytes" -> partFiles.map(_.split(':').last.toLong).sum.toString,
       "files"      -> partFiles.mkString(";"))
@@ -79,8 +82,14 @@ object SnapshotStore {
 
   /** Read the latest snapshot's data. */
   def read(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(latest(dir)
-      .getOrElse(throw new IllegalStateException(s"No snapshot in $dir")).dataPath)
+    load(spark, latest(dir).getOrElse(throw new IllegalStateException(s"No snapshot in $dir")))
+
+  /** A snapshot's data, read with the schema its manifest records (no
+    * schema-inference job); a manifest without one falls back to inference. */
+  def load(spark: SparkSession, snap: Snapshot): DataFrame =
+    snap.meta.get("schema")
+      .fold(spark.read)(s => spark.read.schema(DataType.fromJson(s).asInstanceOf[StructType]))
+      .parquet(snap.dataPath)
 
   /** Iceberg-style snapshot expiration (`expire_snapshots`): delete all but
     * the newest `keepLast` snapshots — manifest first is WRONG; data first
@@ -102,9 +111,8 @@ object SnapshotStore {
   }
 
   def readVersion(spark: SparkSession, dir: String, version: Long): DataFrame = {
-    val s = snapshots(dir).find(_.version == version)
-      .getOrElse(throw new IllegalStateException(s"No snapshot v$version in $dir"))
-    spark.read.parquet(s.dataPath)
+    load(spark, snapshots(dir).find(_.version == version)
+      .getOrElse(throw new IllegalStateException(s"No snapshot v$version in $dir")))
   }
 
   // --- minimal flat JSON (we control both writer and reader) ---

@@ -155,8 +155,10 @@ object LinkPipeline {
           val cfg = graft.algo.PageRankConfig(
             maxIterations = s.config.getOrElse("maxIterations", "20").toInt,
             tolerance = s.config.getOrElse("tolerance", "1e-7").toDouble)
-          graft.algo.PageRank.run(cur, cfg).scores
-            .select(col("id"), col("score").as(s.mutateProperty))
+          val scores = graft.algo.PageRank.run(cur, cfg).scores
+          // a graph made by an earlier step is dropped after this one
+          if (cur ne g) cur.unpersist()
+          scores.select(col("id"), col("score").as(s.mutateProperty))
         case "degree" =>
           graft.algo.DegreeCentrality.run(cur)
             .select(col("id"), col("score").as(s.mutateProperty))

@@ -247,8 +247,9 @@ object Dedup {
       docs.select(col(idCol).cast("long").as("id")),
       pairs.select(col("id_a").cast("long").as("src"),
         col("id_b").cast("long").as("dst")))
-    graft.algo.Wcc.run(g).components
-      .select(col("id"), col("componentId").as("cluster"))
+    val clusters = graft.algo.Wcc.run(g).components
+    g.unpersist()
+    clusters.select(col("id"), col("componentId").as("cluster"))
   }
 
   /** One kept row per near-dup cluster (the cluster's min doc id), plus

@@ -14,10 +14,11 @@ import graft.core.{GraphOps, PropertyGraph}
   * superstep is one (active ⋈ edges) join, one message groupBy with the
   * user's reducer (map-side combined), and one state join-update, built on
   * the superstep kernel ([[SuperstepLoop.scatter]], [[SuperstepLoop.joinBack]]).
-  * The edge table is persisted once per call by the sender side of each
-  * message direction (by `src` for [[sendMsgToDst]], by `dst` for
-  * [[sendMsgToSrc]]), so a superstep streams it past a hash table of the
-  * senders without shuffling or sorting it; a message that reads the
+  * The edge table is partitioned by the sender side of each message
+  * direction (by `src` for [[sendMsgToDst]], by `dst` for [[sendMsgToSrc]]):
+  * the graph's own projections when they hold its edge columns, else a
+  * table persisted for the call. A superstep streams it past a hash table
+  * of the senders without shuffling or sorting it; a message that reads the
   * receiver's state adds one hash join on the receiver. The loop itself
   * (persistence, plan truncation, lazy superstep fusion, durable
   * checkpoint/resume, convergence) is [[SuperstepLoop]].
@@ -145,22 +146,33 @@ final class Pregel private (graph: PropertyGraph) {
         maxSteps = maxIterations, checkpointDir = checkpointDir,
         checkpointInterval = checkpointInterval, fusedSteps = fusedSteps,
         checkpointKeepLast = checkpointKeepLast))((state, _) => step(bySrc, byDst)(state))
-      (bySrc ++ byDst).foreach(_.unpersist(false))
+      if (!graph.plainEdges) (bySrc ++ byDst).foreach(_.unpersist(false))
       result.state.select(col("id") +: vertexCols.map(v => col(v.name)): _*)
     }
   }
 
-  /** The edge table persisted by the sender side of each declared direction:
-    * by `src` for [[sendMsgToDst]], by `dst` for [[sendMsgToSrc]]. */
-  private[graft] def edgeTables(width: Int): (Option[DataFrame], Option[DataFrame]) = (
-    Option.when(msgsToDst.nonEmpty)(SuperstepLoop.persistInput(graph.edges, width, "src")),
-    Option.when(msgsToSrc.nonEmpty)(SuperstepLoop.persistInput(graph.edges, width, "dst")))
+  /** The edge table partitioned by the sender side of each declared
+    * direction: by `src` for [[sendMsgToDst]], by `dst` for [[sendMsgToSrc]].
+    * These are the graph's projections when they hold exactly its edge
+    * columns ([[PropertyGraph.plainEdges]]); other edge columns a message may
+    * read are not in them, so such a graph gets tables of its own. */
+  private[graft] def edgeTables(width: Int): (Option[DataFrame], Option[DataFrame]) = {
+    def table(key: String, projected: => DataFrame) =
+      if (graph.plainEdges) projected.select(graph.edges.columns.map(col): _*)
+      else SuperstepLoop.persistInput(graph.edges, width, key)
+    (Option.when(msgsToDst.nonEmpty)(table("src", graph.outEdges(width))),
+     Option.when(msgsToSrc.nonEmpty)(table("dst", graph.inEdges(width))))
+  }
 
-  /** (id, state columns, _active), partitioned by id after the projection. */
-  private[graft] def initState(width: Int): DataFrame =
-    graph.vertices.select(col("id") +: vertexCols.map(v => v.init.as(v.name)) :+
-        lit(true).as(SuperstepLoop.ActiveCol): _*)
-      .repartition(width, col("id"))
+  /** (id, state columns, _active), hash-partitioned by id: the `init`
+    * columns read the vertex table, repartitioned unless it is only ids. */
+  private[graft] def initState(width: Int): DataFrame = {
+    val vertices =
+      if (graph.vertices.columns.sameElements(Seq("id"))) graph.vertexIds(width)
+      else graph.vertices.repartition(width, col("id"))
+    vertices.select(col("id") +: vertexCols.map(v => v.init.as(v.name)) :+
+      lit(true).as(SuperstepLoop.ActiveCol): _*)
+  }
 
   /** One superstep over the id-partitioned `state0`: every active vertex
     * sends its messages through the superstep kernel's scatter along the

@@ -90,9 +90,10 @@ final case class LoopResult(
   * persisted through [[persistInput]], whose cached plan is non-adaptive:
   * an adaptive one hides its partitioning until the cache is built, and
   * superstep 1 would shuffle the edge table again. The initial state must be
-  * partitioned by `id` after its final projection: a projection that also
-  * aliases `id` (`id AS comp`) leaves a partitioning that plan truncation
-  * reads as `hashpartitioning(comp)`. The loop plans at the session's
+  * hash-partitioned by `id`, typically a projection of
+  * [[graft.core.PropertyGraph.vertexIds]]; a projection that also aliases
+  * `id` (`id AS comp`) is fine, plan truncation keeps its partitioning on
+  * `id`. The loop plans at the session's
   * shuffle width: callers scope it to the width of their inputs with
   * [[graft.core.GraphOps.withShuffleWidth]] around the whole call.
   */
@@ -122,9 +123,11 @@ object SuperstepLoop {
     * Falls back to `init` (fresh run) when no snapshot exists. The final
     * state is identical to an uninterrupted run: supersteps are pure
     * functions of the previous state, and snapshot commits are atomic.
-    * A parquet scan reports no partitioning, so the first superstep of a
-    * resumed run shuffles the re-read state by id once; from then on the
-    * state stays id-partitioned as in an uninterrupted run. */
+    * The snapshot is read with the schema its manifest records, so the
+    * read plans no schema-inference job. A parquet scan reports no
+    * partitioning, so the first superstep of a resumed run shuffles the
+    * re-read state by id once; from then on the state stays id-partitioned
+    * as in an uninterrupted run. */
   def resume(spark: SparkSession, init: => DataFrame, cfg: LoopConfig)
             (step: (DataFrame, Int) => DataFrame): LoopResult = {
     val dir = cfg.checkpointDir.getOrElse(
@@ -134,7 +137,7 @@ object SuperstepLoop {
       case Some(snap) =>
         val iter   = snap.meta("iteration").toInt
         val active = snap.meta("activeCount").toLong
-        val state  = spark.read.parquet(snap.dataPath)
+        val state  = SnapshotStore.load(spark, snap)
         if (active == 0L || iter >= cfg.maxSteps)
           LoopResult(state, iter, active == 0L, Seq.empty)
         else withIterationConf(spark) {

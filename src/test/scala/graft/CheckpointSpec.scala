@@ -45,6 +45,28 @@ class CheckpointSpec extends AnyFunSuite with SparkTestBase {
     depth(rdd)
   }
 
+  test("resume reads the snapshot with its recorded schema: one job fewer than inferring it") {
+    val dir = tempDir("graft-ck-schema")
+    PageRank.run(graph, PageRankConfig(maxIterations = 3, checkpointDir = Some(dir)))
+    assert(SnapshotStore.latest(dir).get.meta.contains("schema"))
+    // the same snapshots, with manifests that record no schema
+    val inferred = tempDir("graft-ck-noschema")
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(dir), new java.io.File(inferred))
+    val manifests = Files.list(java.nio.file.Paths.get(inferred, "_snapshots"))
+    try manifests.iterator().forEachRemaining { p =>
+      Files.writeString(p, Files.readString(p).replaceAll(",\"schema\":\"(?:[^\"\\\\]|\\\\.)*\"", ""))
+    } finally manifests.close()
+    assert(!SnapshotStore.latest(inferred).get.meta.contains("schema"))
+    def resumed(d: String) =
+      PageRank.resume(graph, PageRankConfig(maxIterations = 6, checkpointDir = Some(d))).scores
+    var withSchema, withInference: Map[Long, Double] = Map.empty
+    val jobsWithSchema = jobsIn { withSchema = collectMap(resumed(dir), "id", "score") }
+    val jobsInferring = jobsIn { withInference = collectMap(resumed(inferred), "id", "score") }
+    assert(jobsInferring - jobsWithSchema == 1,
+      s"$jobsWithSchema jobs with the schema, $jobsInferring inferring it")
+    assertRanks(withInference, withSchema, 1e-12)
+  }
+
   test("interrupted pagerank resumes to the identical final state") {
     val dir = Files.createTempDirectory("graft-ck-pr").toString
     // full uninterrupted run, no checkpointing

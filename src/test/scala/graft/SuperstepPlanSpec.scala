@@ -134,36 +134,82 @@ class SuperstepPlanSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("WCC superstep: hash joins on the frontier and the minimum, one exchange") {
+    val graph = PropertyGraph(vertices, edges)
     val (undirected, (cached, state)) = adaptive {
-      (Wcc.undirectedEdges(edges, parts), loopState(Wcc.initState(vertices, None, parts)))
+      (Wcc.undirectedEdges(edges, parts), loopState(Wcc.initState(graph.vertexIds(parts), None)))
     }
     assertIdPartitioned("WCC", state)
     assertShape("WCC", plannedStep(Wcc.step(undirected)(state)))
-    undirected.unpersist(false); cached.unpersist(false)
+    undirected.unpersist(false); cached.unpersist(false); graph.unpersist()
   }
 
   test("LP superstep: hash joins on the labels and the votes, one exchange") {
+    val graph = PropertyGraph(vertices, edges)
     val (votes, (cached, state)) = adaptive {
       (LabelPropagation.voteEdges(edges.withColumn("weight", lit(1.0)), parts),
-       loopState(LabelPropagation.initState(vertices, LpConfig(), parts)))
+       loopState(LabelPropagation.initState(graph.vertexIds(parts), LpConfig())))
     }
     assertIdPartitioned("LP", state)
     for (schedule <- Seq(Schedule.Sync, Schedule.FullSync))
       assertShape(s"LP $schedule", plannedStep(
         LabelPropagation.syncStep(votes, schedule, parts)(state, 1)))
-    votes.unpersist(false); cached.unpersist(false)
+    votes.unpersist(false); cached.unpersist(false); graph.unpersist()
+  }
+
+  test("truncatePlan keeps the id partitioning of a projection that aliases id") {
+    val graph = PropertyGraph(vertices, edges)
+    val (cached, state) = adaptive(loopState(graph.vertexIds(parts)
+      .select(col("id"), col("id").as("comp"))))
+    assertIdPartitioned("select(id, id AS comp)", state)
+    cached.unpersist(false); graph.unpersist()
+  }
+
+  /** Exchanges in the plan that builds `df`: its own cache fill when `df`
+    * is a persisted table, else its plan; the projections it reads are
+    * cache scans, so their own builds are not counted. */
+  private def buildExchanges(df: DataFrame): Int =
+    (inLoop(df.queryExecution.executedPlan) match {
+      case scan: InMemoryTableScanExec => scan.relation.cachedPlan
+      case plan => plan
+    }).collect { case e: ShuffleExchangeExec => e }.size
+
+  test("warm projections: PageRank, WCC and LP inputs and initial states plan no exchange") {
+    val graph = PropertyGraph(vertices, edges)
+    val cfg = PageRankConfig()
+    adaptive(Seq(graph.outEdges(parts), graph.inEdges(parts), graph.vertexIds(parts))
+      .foreach(_.count()))
+    val (augEdges, undirected, votes) = adaptive {
+      (inLoop(PageRank.inputs(graph, cfg, parts, articleRank = false))._1,
+       Wcc.undirectedEdges(graph, parts), LabelPropagation.voteEdges(graph, LpConfig(), parts))
+    }
+    assert(votes eq graph.inEdges(parts), "LP votes are not the graph's inEdges projection")
+    val inits = Seq(
+      "PageRank" -> PageRank.initState(augEdges, cfg),
+      "WCC" -> Wcc.initState(graph.vertexIds(parts), None),
+      "LP" -> LabelPropagation.initState(graph.vertexIds(parts), LpConfig()))
+    for ((name, df) <- Seq("PageRank augEdges" -> augEdges, "WCC undirected" -> undirected) ++
+        inits.map { case (a, init) => s"$a initial state" -> init })
+      assert(buildExchanges(df) == 0, s"$name plans an exchange:\n${df.queryExecution.executedPlan}")
+    val states = inits.toMap.map { case (name, init) => name -> adaptive(loopState(init)) }
+    assertShape("PageRank", plannedStep(
+      PageRank.step(augEdges, None, cfg, 1.0)(states("PageRank")._2, 1)))
+    assertShape("WCC", plannedStep(Wcc.step(undirected)(states("WCC")._2)))
+    assertShape("LP", plannedStep(
+      LabelPropagation.syncStep(votes, Schedule.Sync, parts)(states("LP")._2, 1)))
+    states.values.foreach(_._1.unpersist(false))
+    augEdges.unpersist(false); undirected.unpersist(false); graph.unpersist()
   }
 
   test("relax min superstep (SSSP shape): hash joins, one exchange") {
     val graph = PropertyGraph(vertices, edges.withColumn("weight", col("src") * 0.5 + 1.0))
     val (weighted, (cached, state)) = adaptive {
-      (Paths.weightedEdges(graph, Orientation.Natural, parts),
-       loopState(Paths.sourceState(vertices, 0L, 0.0, Double.PositiveInfinity, parts)))
+      (graph.edgesBySrc(Orientation.Natural, parts),
+       loopState(Paths.sourceState(graph.vertexIds(parts), 0L, 0.0, Double.PositiveInfinity)))
     }
     assertIdPartitioned("SSSP", state)
     assertShape("relax min", plannedStep(
       SuperstepLoop.relax(state, weighted, "dist", col("dist") + col("weight"), min = true)))
-    weighted.unpersist(false); cached.unpersist(false)
+    cached.unpersist(false); graph.unpersist()
   }
 
   test("relax max superstep along reversed edges (SCC-reach shape): hash joins, one exchange") {
@@ -225,18 +271,19 @@ class SuperstepPlanSpec extends AnyFunSuite with SparkTestBase {
     bySrc.unpersist(false); byDst.unpersist(false); cached.unpersist(false)
   }
 
-  /** Superstep 1 of `pregel`, over its own edge tables and initial state. */
-  private def assertPregelStep(name: String, pregel: Pregel): Unit = {
+  /** Superstep 1 of `pregel` over `graph`, over its own edge tables and
+    * initial state (the graph's projections, freed after). */
+  private def assertPregelStep(name: String, graph: PropertyGraph, pregel: Pregel): Unit = {
     val ((bySrc, byDst), (cached, state)) =
       adaptive((pregel.edgeTables(parts), loopState(pregel.initState(parts))))
     assertIdPartitioned(name, state)
     assertKernelShape(name, plannedStep(pregel.step(bySrc, byDst)(state)))
-    (bySrc ++ byDst).foreach(_.unpersist(false)); cached.unpersist(false)
+    cached.unpersist(false); graph.unpersist()
   }
 
   test("Pregel sender-only superstep (sendMsgToDst): kernel scatter, no sort, edges not shuffled") {
     val graph = PropertyGraph(vertices, edges.withColumn("weight", lit(2.0)))
-    assertPregelStep("Pregel SSSP", Pregel(graph)
+    assertPregelStep("Pregel SSSP", graph, Pregel(graph)
       .withVertexColumn("dist", init = when(col("id") === 0L, 0.0),
         afterMsg = least(coalesce(col("dist"), Pregel.msg), Pregel.msg))
       .sendMsgToDst(Pregel.src("dist") + Pregel.edge("weight"))
@@ -244,7 +291,8 @@ class SuperstepPlanSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("Pregel sendMsgToSrc superstep: edges persisted by dst, no sort, not shuffled") {
-    assertPregelStep("Pregel to src", Pregel(PropertyGraph(vertices, edges))
+    val graph = PropertyGraph(vertices, edges)
+    assertPregelStep("Pregel to src", graph, Pregel(graph)
       .withVertexColumn("label", init = col("id"), afterMsg = least(col("label"), Pregel.msg))
       .sendMsgToSrc(Pregel.dst("label"))
       .aggMsgs(min(Pregel.msg)))
@@ -264,11 +312,13 @@ class SuperstepPlanSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("Pregel, HITS and Eigenvector unpersist every edge table they persist") {
-    // the loop's final state stays cached for the caller: one entry per call
+    // the loop's final state stays cached for the caller: one entry per
+    // call; the edge and id projections are the graph's, freed by it
     val graph = PropertyGraph(vertices, edges)
     def newEntries(run: => DataFrame): Int = {
       val before = GraftTestAccess.cachedEntries(spark)
       run.count()
+      graph.unpersist()
       GraftTestAccess.cachedEntries(spark) - before
     }
     assert(newEntries(Pregel(graph)
